@@ -7,21 +7,25 @@ gaussian-weighted means (and EAPE) in a multiprocessing pool
 
 Spark-first re-expression:
 
-- grid table from spark.range cross-join (F14, atlas.py:83-90)
+- grid table from one spark.range over the cells, lon/lat by div/mod
+  (F14, atlas.py:83-90) — no join, no job
 - optional land-mask gate as a broadcast join *before* compute
   (P10/X9, atlas.py:266-272)
 - the tile/halo machinery becomes the binned neighborhood join
   (operators/spatial.py) — one equi-join shuffle, no tiles to assemble
 - the weighted per-level mean (A1-A3) runs per cell on Arrow batches
-  (applyInPandas), NumPy-vectorized over the (profiles × 64 levels)
+  (applyInArrow), NumPy-vectorized over the (profiles × 64 levels)
   block, exactly the reference's inner kernel shape
-- EAPE (A4, R14 algorithm) is the two-pass dataflow: cell-mean profile
-  (pass 1) broadcast-joined back to the matched pairs (pass 2).
+- EAPE (A4, R14 algorithm) needs only the cell's own mean profile, and
+  the cell's pair group already holds everything that mean needs: one
+  group kernel computes the mean (rounded through f4, as the stored
+  atlas is) and then the EAPE against it — one pair exchange, no
+  second pass, no means join-back.
 
 Scale note: a profile within kernel radius of k cells appears k times
 in the pair set — that amplification is inherent to the kernel support
 (the reference pays it as per-tile AOS copies, atlas.py:503-514). The
-pair set is the one thing worth caching between TS and EAPE passes
+pair set is the one thing worth caching between the TS and EAPE calls
 (SURVEY §7.4.2).
 """
 
@@ -58,13 +62,13 @@ def make_grid(
     nlon = int(round((lon_max - lon_min) / reso_deg))
     nlat = int(round((lat_max - lat_min) / reso_deg))
     half = reso_deg / 2.0
-    lons = spark.range(nlon).select(
-        (F.lit(lon_min) + F.col("id") * reso_deg + half).cast("double").alias("glon")
+    # one range over the cells, lon-major: a cross join of two ranges
+    # would cost a broadcast job per call
+    i_lon, i_lat = F.expr(f"id div {nlat}"), F.col("id") % nlat
+    return spark.range(nlon * nlat).select(
+        (F.lit(lon_min) + i_lon * reso_deg + half).cast("double").alias("glon"),
+        (F.lit(lat_min) + i_lat * reso_deg + half).cast("double").alias("glat"),
     )
-    lats = spark.range(nlat).select(
-        (F.lit(lat_min) + F.col("id") * reso_deg + half).cast("double").alias("glat")
-    )
-    return lons.crossJoin(lats)
 
 
 def apply_ocean_mask(
@@ -119,6 +123,54 @@ _TS_SCHEMA = T.StructType([
 ])
 
 
+def _level_means(coef: np.ndarray, n_lev: np.ndarray, *blocks: np.ndarray):
+    """Per-level weighted means Σ(coef·x)/Σcoef of (n, 64) blocks, 0 on
+    levels with no weight — the one f8 formula every cell kernel uses
+    (A1-A3, atlas.py:93-142)."""
+    ok = n_lev > 0
+    out = []
+    for x in blocks:
+        m = np.zeros(NLEVELS, dtype="f8")
+        m[ok] = (coef * x).sum(axis=0)[ok] / n_lev[ok]
+        out.append(m)
+    return out
+
+
+def _levels(table, name: str) -> np.ndarray:
+    """An Arrow list<float> column of 64-level arrays as an (n, 64) f8
+    block."""
+    arr = table.column(name)
+    if hasattr(arr, "combine_chunks"):
+        arr = arr.combine_chunks()
+    return (
+        arr.flatten().to_numpy(zero_copy_only=False)
+        .astype("f8", copy=False).reshape(table.num_rows, NLEVELS)
+    )
+
+
+def _one_cell(glon, glat, n: int, **arrays: np.ndarray):
+    """The one-row Arrow table a cell kernel returns: key, pair count
+    and its 64-level arrays stored as f4."""
+    import pyarrow as pa
+
+    offs = pa.array(np.array([0, NLEVELS], dtype="i4"))
+    return pa.table({
+        "glon": pa.array([float(glon)], pa.float64()),
+        "glat": pa.array([float(glat)], pa.float64()),
+        "n_points": pa.array([n], pa.int32()),
+        **{k: pa.ListArray.from_arrays(offs, pa.array(v.astype("f4")))
+           for k, v in arrays.items()},
+    })
+
+
+def _cell_weights(table, theta: float) -> tuple[np.ndarray, np.ndarray]:
+    """Kernel coefficients w·IDX per (pair, level) and their per-level
+    sums for one cell's pair group."""
+    hav = table.column("hav").to_numpy(zero_copy_only=False).astype("f8")
+    coef = np.exp(-hav / theta)[:, None] * _levels(table, "IDX")
+    return coef, coef.sum(axis=0)
+
+
 def _ts_cell_kernel(theta: float):
     def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         limit_blas_threads()
@@ -129,11 +181,7 @@ def _ts_cell_kernel(theta: float):
         sr = np.stack(pdf["SR"].to_numpy()).astype("f8")
         coef = w[:, None] * idx                                       # (n, 64)
         n_lev = coef.sum(axis=0)                                      # (64,)
-        ok = n_lev > 0
-        ct_m = np.zeros(NLEVELS, dtype="f8")
-        sr_m = np.zeros(NLEVELS, dtype="f8")
-        ct_m[ok] = (coef * ct).sum(axis=0)[ok] / n_lev[ok]
-        sr_m[ok] = (coef * sr).sum(axis=0)[ok] / n_lev[ok]
+        ct_m, sr_m = _level_means(coef, n_lev, ct, sr)
         return pd.DataFrame(
             {
                 "glon": [float(glon)],
@@ -154,43 +202,13 @@ def _ts_cell_kernel_arrow(theta: float):
     item 6) it wins at every group shape; see the clim_ts docstring."""
 
     def kernel(key, table):
-        import pyarrow as pa
-
         limit_blas_threads()
         glon, glat = (k.as_py() if hasattr(k, "as_py") else k for k in key)
-        n = table.num_rows
-        hav = table.column("hav").to_numpy(zero_copy_only=False).astype("f8")
-
-        def mat(name: str) -> np.ndarray:
-            arr = table.column(name).combine_chunks()
-            return (
-                arr.flatten().to_numpy(zero_copy_only=False)
-                .astype("f8", copy=False).reshape(n, NLEVELS)
-            )
-
-        w = np.exp(-hav / theta)
-        coef = w[:, None] * mat("IDX")
-        n_lev = coef.sum(axis=0)
-        ok = n_lev > 0
-        ct_m = np.zeros(NLEVELS, dtype="f8")
-        sr_m = np.zeros(NLEVELS, dtype="f8")
-        ct_m[ok] = (coef * mat("CT")).sum(axis=0)[ok] / n_lev[ok]
-        sr_m[ok] = (coef * mat("SR")).sum(axis=0)[ok] / n_lev[ok]
-        offs = pa.array(np.array([0, NLEVELS], dtype="i4"))
-
-        def one(v: np.ndarray) -> pa.Array:
-            return pa.ListArray.from_arrays(offs, pa.array(v.astype("f4")))
-
-        return pa.table(
-            {
-                "glon": pa.array([float(glon)], pa.float64()),
-                "glat": pa.array([float(glat)], pa.float64()),
-                "n_points": pa.array([n], pa.int32()),
-                "CT": one(ct_m),
-                "SR": one(sr_m),
-                "W": one(n_lev),
-            }
+        coef, n_lev = _cell_weights(table, theta)
+        ct_m, sr_m = _level_means(
+            coef, n_lev, _levels(table, "CT"), _levels(table, "SR")
         )
+        return _one_cell(glon, glat, table.num_rows, CT=ct_m, SR=sr_m, W=n_lev)
 
     return kernel
 
@@ -336,28 +354,26 @@ def estimate_pair_count(
 ) -> int:
     """EXACT size of the binned neighborhood join's output before the
     haversine cutoff (an upper bound on the pair set, ~4/π over it for
-    uniform density): Σ_bins |exploded grid rows| × |profiles|. Costs
-    two tiny count-aggregations — the profile side map-combines to one
-    row per occupied bin — and one driver scalar; nothing like the join
-    itself runs."""
+    uniform density): Σ_bins |exploded grid rows| × |profiles|. One
+    union of bin rows tagged by side, counted per bin — map-side
+    combined to one row per occupied bin, O(profiles + cells) — and one
+    driver scalar; nothing like the join itself runs."""
     radius = smoothing_factor * reso_deg
     bin_deg = max(radius, 1.0)
     pred = F.col("FLAG") == 1
     if delayed_only:
         pred = pred & (F.col("DATA_MODE") == 1)
-    p_hist = (
-        with_bins(profiles.filter(pred), "LONGITUDE", "LATITUDE", bin_deg)
-        .groupBy("lon_bin", "lat_bin")
-        .agg(F.count(F.lit(1)).alias("n_p"))
+    bins = ["lon_bin", "lat_bin"]
+    g = explode_neighbor_bins(grid, "glon", "glat", radius, bin_deg).select(
+        *bins, F.lit(1).alias("n_g"), F.lit(0).alias("n_p")
     )
-    g_hist = (
-        explode_neighbor_bins(grid, "glon", "glat", radius, bin_deg)
-        .groupBy("lon_bin", "lat_bin")
-        .agg(F.count(F.lit(1)).alias("n_g"))
+    p = with_bins(profiles.filter(pred), "LONGITUDE", "LATITUDE", bin_deg).select(
+        *bins, F.lit(0).alias("n_g"), F.lit(1).alias("n_p")
     )
     row = (
-        g_hist.join(p_hist, on=["lon_bin", "lat_bin"])
-        .agg(F.sum(F.col("n_g") * F.col("n_p")).alias("pairs"))
+        g.unionByName(p).groupBy(*bins)
+        .agg((F.sum("n_g") * F.sum("n_p")).alias("pairs"))
+        .agg(F.sum("pairs").alias("pairs"))
         .first()
     )
     return int(row["pairs"] or 0)
@@ -466,7 +482,7 @@ def export_atlas_netcdf(
 
 
 # ---------------------------------------------------------------------------
-# Pass 2: EAPE, R14 algorithm (A4; atlas.py:152-191, 281-298)
+# EAPE, R14 and T25 algorithms (A4; atlas.py:152-231, 281-304)
 # ---------------------------------------------------------------------------
 
 _EAPE_SCHEMA = T.StructType([
@@ -481,9 +497,9 @@ _EAPE_SCHEMA = T.StructType([
 def _eape_integrand(
     rho_i, sr, ct, rho_bar, ct_bar, sr_bar, pref, unit, algo: str
 ):
-    """eape_i for one (rows × 64) block — shared by the per-pair
-    kernels (legacy payload) and the per-profile feature pass (fast
-    payload), so both paths run the SAME elementwise f8 arithmetic."""
+    """eape_i for one (rows × 64) block — shared by the cell kernel
+    (per-pair payload) and the per-profile T25 feature pass, so both
+    paths run the SAME elementwise f8 arithmetic."""
     if algo == "R14":
         # displacement against the *local* cell-mean profile via
         # isopycnal lookup (atlas.py:184-191)
@@ -510,157 +526,64 @@ def _eape_integrand(
 
 
 def _eape_cell_kernel(theta: float, algo: str = "R14", feat: str | None = None):
-    """Per-cell EAPE weighted mean (pandas transport). ``feat`` names a
-    precomputed per-profile column in the fast payload ("RHO_I" for
-    R14, "EI" for T25 — see _eape_profile_features); feat=None is the
-    legacy payload (CT/SR aboard every pair, all per-profile math
-    in-kernel)."""
-    pref = pref64().astype("f8")
-    unit = eape_unit()
-
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        limit_blas_threads()
-        glon, glat = key
-        w = np.exp(-pdf["hav"].to_numpy(dtype="f8") / theta)
-        idx = np.stack(pdf["IDX"].to_numpy()).astype("f8")
-        ct_bar = np.asarray(pdf["CT_BAR"].iloc[0], dtype="f8")
-        sr_bar = np.asarray(pdf["SR_BAR"].iloc[0], dtype="f8")
-
-        # mean-profile density + compressibility factor (atlas.py:316-324)
-        rho_bar = rho(sr_bar, ct_bar, pref)
-        if feat == "EI":
-            eape_i = np.stack(pdf["EI"].to_numpy()).astype("f8")
-        else:
-            if feat == "RHO_I":
-                rho_i = np.stack(pdf["RHO_I"].to_numpy()).astype("f8")
-                sr = ct = None
-            else:
-                ct = np.stack(pdf["CT"].to_numpy()).astype("f8")
-                sr = np.stack(pdf["SR"].to_numpy()).astype("f8")
-                rho_i = rho(sr, ct, pref[None, :])
-            eape_i = _eape_integrand(
-                rho_i, sr, ct, rho_bar, ct_bar, sr_bar, pref, unit, algo
-            )
-
-        coef = w[:, None] * idx
-        n_lev = coef.sum(axis=0)
-        ok = n_lev > 0
-        eape_m = np.zeros(NLEVELS, dtype="f8")
-        eape_m[ok] = (coef * eape_i).sum(axis=0)[ok] / n_lev[ok]
-        return pd.DataFrame(
-            {
-                "glon": [float(glon)],
-                "glat": [float(glat)],
-                "n_points": [len(pdf)],
-                "RHO": [rho_bar.astype("f4").tolist()],
-                "EAPE": [eape_m.astype("f4").tolist()],
-            }
-        )
-
-    return kernel
-
-
-def _eape_cell_kernel_arrow(
-    theta: float, algo: str = "R14", feat: str | None = None
-):
-    """Arrow twin of :func:`_eape_cell_kernel` (round 14) — the same
-    flat-buffer transport the TS kernel adopted in round 5 (measured
-    3-5× on batch materialization there; pandas object-column stacks
-    churn the worker GC). Row-identical to the pandas kernel, pinned
-    by tests/test_argo_pipeline.py."""
+    """Per-cell EAPE in one pass over the cell's pair group: the cell's
+    weighted-mean profile (clim_ts's formula, rounded through f4 as the
+    stored atlas is), then the per-pair integrand against it and its
+    weighted mean. ``feat="EI"`` reads the per-profile T25 integrand
+    from the payload (see _eape_profile_features); feat=None computes
+    eape_i here from the pair's CT/SR."""
     pref = pref64().astype("f8")
     unit = eape_unit()
 
     def kernel(key, table):
-        import pyarrow as pa
-
         limit_blas_threads()
         glon, glat = (k.as_py() if hasattr(k, "as_py") else k for k in key)
-        n = table.num_rows
-
-        def mat(name: str) -> np.ndarray:
-            arr = table.column(name).combine_chunks()
-            return (
-                arr.flatten().to_numpy(zero_copy_only=False)
-                .astype("f8", copy=False).reshape(n, NLEVELS)
-            )
-
-        hav = table.column("hav").to_numpy(zero_copy_only=False).astype("f8")
-        ct_bar = np.asarray(table.column("CT_BAR")[0].as_py(), dtype="f8")
-        sr_bar = np.asarray(table.column("SR_BAR")[0].as_py(), dtype="f8")
-        w = np.exp(-hav / theta)
-        idx = mat("IDX")
+        coef, n_lev = _cell_weights(table, theta)
+        ct, sr = _levels(table, "CT"), _levels(table, "SR")
+        ct_bar, sr_bar = (
+            m.astype("f4").astype("f8") for m in _level_means(coef, n_lev, ct, sr)
+        )
+        # mean-profile density + compressibility factor (atlas.py:316-324)
         rho_bar = rho(sr_bar, ct_bar, pref)
         if feat == "EI":
-            eape_i = mat("EI")
+            eape_i = _levels(table, "EI")
         else:
-            if feat == "RHO_I":
-                rho_i = mat("RHO_I")
-                sr = ct = None
-            else:
-                ct = mat("CT")
-                sr = mat("SR")
-                rho_i = rho(sr, ct, pref[None, :])
             eape_i = _eape_integrand(
-                rho_i, sr, ct, rho_bar, ct_bar, sr_bar, pref, unit, algo
+                rho(sr, ct, pref[None, :]), sr, ct, rho_bar, ct_bar, sr_bar,
+                pref, unit, algo,
             )
-        coef = w[:, None] * idx
-        n_lev = coef.sum(axis=0)
-        ok = n_lev > 0
-        eape_m = np.zeros(NLEVELS, dtype="f8")
-        eape_m[ok] = (coef * eape_i).sum(axis=0)[ok] / n_lev[ok]
-        offs = pa.array(np.array([0, NLEVELS], dtype="i4"))
-
-        def one(v: np.ndarray) -> pa.Array:
-            return pa.ListArray.from_arrays(offs, pa.array(v.astype("f4")))
-
-        return pa.table(
-            {
-                "glon": pa.array([float(glon)], pa.float64()),
-                "glat": pa.array([float(glat)], pa.float64()),
-                "n_points": pa.array([n], pa.int32()),
-                "RHO": one(rho_bar),
-                "EAPE": one(eape_m),
-            }
-        )
+        (eape_m,) = _level_means(coef, n_lev, eape_i)
+        return _one_cell(glon, glat, table.num_rows, RHO=rho_bar, EAPE=eape_m)
 
     return kernel
 
 
-def _eape_profile_features(pts: DataFrame, algo: str) -> DataFrame:
-    """The cell-independent part of the EAPE integrand, computed ONCE
-    per PROFILE instead of once per (cell × profile) pair (round 14,
-    guide §1.2 "the distributed algorithm first").
+def _eape_profile_features(pts: DataFrame) -> DataFrame:
+    """The T25 integrand, computed ONCE per PROFILE instead of once per
+    (cell × profile) pair (round 14, guide §1.2 "the distributed
+    algorithm first").
 
     A profile within kernel radius of k cells appears k times in the
     pair set (k ≈ 12-20 at the bench grids, and it grows with the
-    kernel radius). The 75-term TEOS-10 density polynomial (both
-    algos) and the 30-iteration gammat bisection (T25 — itself 30
-    more 75-term evaluations) depend only on the profile's own
-    (SR, CT), so evaluating them inside the per-cell kernel re-pays
-    them k times. This one Arrow pass over the profile table computes
-
-    - R14: ``RHO_I`` — ρ(SR, CT, pref) per level (the R14 kernel still
-      needs the cell-mean curve for the isopycnal lookup, so only the
-      density moves out of the kernel);
-    - T25: ``EI`` — the FULL per-profile integrand
-      0.5·unit·(ρᵢ − ρref)·(disp − pref): displacement is against the
-      global Lorenz profile, so nothing in eape_i depends on the cell.
+    kernel radius). T25 displaces against the global Lorenz profile, so
+    its whole integrand ``EI`` = 0.5·unit·(ρᵢ − ρref)·(disp − pref) —
+    the 75-term TEOS-10 density plus the 30-iteration gammat bisection
+    (30 more 75-term evaluations) — depends only on the profile's own
+    (SR, CT), and evaluating it in the cell kernel would re-pay it k
+    times. R14 displaces against the cell mean, so it has no such
+    cell-independent integrand.
 
     Values are elementwise f8, identical arithmetic to the in-kernel
-    path (shared :func:`_eape_integrand`), so the downstream weighted
-    mean consumes bitwise-identical inputs. The pair shuffle carries
-    one f8 array instead of the two f4 CT/SR arrays."""
+    path (shared :func:`_eape_integrand`). CT/SR pass through: the cell
+    kernel still needs them for the cell-mean profile."""
     import pyarrow as pa
 
-    feat = {"R14": "RHO_I", "T25": "EI"}[algo]
     pref = pref64().astype("f8")
     unit = eape_unit()
+    keep = ("lon", "lat", "CT", "SR", "IDX")
     schema = T.StructType([
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-        T.StructField("IDX", pts.schema["IDX"].dataType),
-        T.StructField(feat, T.ArrayType(T.DoubleType())),
+        *(pts.schema[c] for c in keep),
+        T.StructField("EI", T.ArrayType(T.DoubleType())),
     ])
 
     def gen(batches):
@@ -669,32 +592,16 @@ def _eape_profile_features(pts: DataFrame, algo: str) -> DataFrame:
             n = tb.num_rows
             if n == 0:
                 continue
-
-            def mat(name: str) -> np.ndarray:
-                arr = tb.column(name)
-                return (
-                    arr.flatten().to_numpy(zero_copy_only=False)
-                    .astype("f8", copy=False).reshape(n, NLEVELS)
-                )
-
-            sr = mat("SR")
-            ct = mat("CT")
-            rho_i = rho(sr, ct, pref[None, :])
-            if algo == "R14":
-                out = rho_i
-            else:
-                # rho_bar/ct_bar/sr_bar unused by the T25 branch
-                out = _eape_integrand(
-                    rho_i, sr, ct, None, None, None, pref, unit, "T25"
-                )
-            offs = pa.array(
-                np.arange(0, (n + 1) * NLEVELS, NLEVELS, dtype="i4")
+            sr, ct = _levels(tb, "SR"), _levels(tb, "CT")
+            # rho_bar/ct_bar/sr_bar unused by the T25 branch
+            ei = _eape_integrand(
+                rho(sr, ct, pref[None, :]), sr, ct, None, None, None,
+                pref, unit, "T25",
             )
+            offs = pa.array(np.arange(0, (n + 1) * NLEVELS, NLEVELS, dtype="i4"))
             yield pa.record_batch({
-                "lon": tb.column("lon"),
-                "lat": tb.column("lat"),
-                "IDX": tb.column("IDX"),
-                feat: pa.ListArray.from_arrays(offs, pa.array(out.ravel())),
+                **{c: tb.column(c) for c in keep},
+                "EI": pa.ListArray.from_arrays(offs, pa.array(ei.ravel())),
             })
 
     return pts.mapInArrow(gen, schema)
@@ -706,59 +613,38 @@ def clim_eape(
     reso_deg: float,
     smoothing_factor: float = 4.0,
     pairs: DataFrame | None = None,
-    ts: DataFrame | None = None,
     algo: str = "R14",
-    engine: str = "arrow",
 ) -> DataFrame:
-    """EAPE climatology: pass 1 cell means → joined back to the pair set
-    → per-pair displacement/EAPE → weighted mean (SURVEY §7.4.2 two-pass
-    dataflow).
+    """EAPE climatology in one pass: the pair set is repartitioned by
+    cell once, and one Arrow group kernel per cell computes the cell's
+    weighted-mean profile and then the EAPE against it (A4). The means
+    are rounded through f4 exactly as clim_ts stores them, so the
+    output equals the two-pass composition (clim_ts means, then the
+    per-pair integrand) bit for bit (pinned by test).
 
     algo="R14": isopycnal displacement against the local cell-mean
     profile (Roullet et al. 2014). algo="T25": displacement against the
     global analytic Lorenz profile via the gammat bisection (Tailleux &
-    Roullet 2025). Same dataflow, different per-pair kernel — unlike the
+    Roullet 2025). Same dataflow, different integrand — unlike the
     reference, the algo switch can't leave variables unbound
-    (atlas.py:439-448 defect, SURVEY §2.11).
+    (atlas.py:439-448 defect, SURVEY §2.11); an unknown algo raises in
+    the kernel at run time.
 
-    Round-14 physical-plan changes (measured, scripts/bench_eape_ab.py;
-    output row-identical either way, pinned by tests):
-
-    - ``engine="arrow"`` (default where applyInArrow exists): the cell
-      kernel rides the same flat-buffer transport the TS kernel
-      adopted in round 5; "pandas" is the fallback.
-    - the broadcast means join-back attaches AFTER the pair
-      repartition, so the per-cell CT_BAR/SR_BAR arrays (512 B/pair of
-      per-cell constants) never cross the pair exchange — the
-      BroadcastHashJoin preserves the streamed side's partitioning, so
-      the groupBy still needs no extra shuffle (plan-pinned).
-    - T25 with the pair set built HERE (``pairs=None``): the
-      cell-independent integrand (density + gammat bisection — ALL of
-      eape_i, since T25 displaces against the global Lorenz profile)
-      moves out of the per-pair kernel into one per-PROFILE Arrow
-      pass (:func:`_eape_profile_features`), gated by a bin-cover
-      semi-join so only profiles that can reach the grid pay it — a
-      profile within radius of k cells otherwise pays the bisection
-      k times. R14 keeps the per-pair payload everywhere (its
-      cell-independent part is just one density evaluation; measured,
-      the extra Python pass costs more than the dedup saves). A
-      caller-supplied ``pairs`` (the cached pair set
-      argo_atlas_pipeline shares between TS and both EAPE passes)
-      keeps the legacy per-pair payload — identical results on every
-      path (pinned)."""
+    T25 with the pair set built HERE (``pairs=None``): the whole
+    integrand is cell-independent, so it moves out of the cell kernel
+    into one per-PROFILE Arrow pass (:func:`_eape_profile_features`),
+    gated by a bin-cover semi-join so only profiles that can reach the
+    grid pay it. R14 keeps the per-pair payload (its cell-independent
+    part is one density evaluation; measured in round 14, the extra
+    Python pass costs more than the k-fold dedup saves). A
+    caller-supplied ``pairs`` (the cached pair set argo_atlas_pipeline
+    shares between its TS and EAPE calls) always ships the per-pair
+    payload — identical results on every path (pinned)."""
     theta = math.sin(math.radians(smoothing_factor * reso_deg) / 2.0) ** 2
     n = grid.sparkSession.sparkContext.defaultParallelism
-    # T25 only: R14's cell-independent work is just the density
-    # polynomial — measured (scripts/bench_eape_ab.py) the extra
-    # Python pass costs more than the k-fold dedup saves there, so
-    # R14 keeps the per-pair payload. T25's per-pair work is the
-    # 30-iteration gammat bisection (30 more 75-term evaluations),
-    # which dwarfs the pass.
-    feat = "EI" if algo == "T25" else None
-    if pairs is None and feat is not None:
-        # fast path: per-profile features, then the neighborhood join
-        # ships (hav, IDX, feat) per pair — one f8 array instead of
-        # the two f4 CT/SR arrays the legacy payload carried
+    cols = ["glon", "glat", "hav", "CT", "SR", "IDX"]
+    feat = None
+    if pairs is None and algo == "T25":
         radius = smoothing_factor * reso_deg
         pred = (F.col("FLAG") == 1) & (F.col("DATA_MODE") == 1)
         pts = profiles.filter(pred).select(
@@ -780,33 +666,14 @@ def clim_eape(
         pts = with_bins(pts, "lon", "lat", bin_deg).join(
             F.broadcast(gbins), ["lon_bin", "lat_bin"], "left_semi"
         ).drop("lon_bin", "lat_bin")
-        payload = neighborhood_join(
-            grid, _eape_profile_features(pts, algo), radius_deg=radius,
-        ).select("glon", "glat", "hav", "IDX", feat)
-        if ts is None:
-            ts = clim_ts(grid, profiles, reso_deg, smoothing_factor)
-    else:
-        if pairs is None:
-            pairs = match_pairs(grid, profiles, reso_deg, smoothing_factor)
-        if ts is None:
-            ts = clim_ts(grid, profiles, reso_deg, smoothing_factor,
-                         pairs=pairs)
-        feat = None  # legacy per-pair payload (or unknown algo: the
-        # kernel raises at run time, matching the pre-r14 behavior)
-        payload = pairs.select("glon", "glat", "hav", "CT", "SR", "IDX")
-    means = ts.select(
-        "glon", "glat",
-        F.col("CT").alias("CT_BAR"), F.col("SR").alias("SR_BAR"),
-    )
-    grouped = (
-        payload.repartition(n, "glon", "glat")
-        .join(F.broadcast(means), on=["glon", "glat"])
-        .groupBy("glon", "glat")
-    )
-    if engine == "arrow" and hasattr(grouped, "applyInArrow"):
-        return grouped.applyInArrow(
-            _eape_cell_kernel_arrow(theta, algo, feat), _EAPE_SCHEMA
-        )
-    return grouped.applyInPandas(
-        _eape_cell_kernel(theta, algo, feat), _EAPE_SCHEMA
+        pairs = neighborhood_join(grid, _eape_profile_features(pts), radius_deg=radius)
+        feat = "EI"
+        cols.append(feat)
+    elif pairs is None:
+        pairs = match_pairs(grid, profiles, reso_deg, smoothing_factor)
+    # ship only what the kernel reads (see clim_ts); parallelism pinned
+    # for the Python stage as there
+    return (
+        pairs.select(*cols).repartition(n, "glon", "glat").groupBy("glon", "glat")
+        .applyInArrow(_eape_cell_kernel(theta, algo, feat), _EAPE_SCHEMA)
     )

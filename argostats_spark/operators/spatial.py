@@ -77,10 +77,15 @@ def explode_neighbor_bins(
         F.ceil(lon_span / F.lit(bin_deg)).cast("int"), F.lit(half_ring)
     )
 
+    # offsets -klon..klon, cut to one lap of the ring: where 2·klon+1
+    # exceeds nlon a wider run would emit some (cell, bin) rows twice
+    # and double-weight their points
     g = (
         g.withColumn("_klon", klon)
         .withColumn("_dlat", F.explode(F.sequence(F.lit(-klat), F.lit(klat))))
-        .withColumn("_dlon", F.explode(F.sequence(-F.col("_klon"), F.col("_klon"))))
+        .withColumn("_dlon", F.explode(F.sequence(
+            -F.col("_klon"), F.least(F.col("_klon"), F.lit(nlon - 1) - F.col("_klon"))
+        )))
     )
     return (
         g.withColumn("lon_bin", F.pmod(F.col("g_lon_bin") + F.col("_dlon"), F.lit(nlon)))

@@ -14,28 +14,21 @@ is written back partitioned the same way.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.qc import combine_qc
 from ..schemas import PLATFORMS
 
 
-def platform_dim(spark: SparkSession) -> DataFrame:
-    """The static platform dictionary (reference toctools.py:26-55,
-    195-196: int8 code = PLATFORMS.index) as a broadcastable dim table
-    (PLATFORM string, PLATFORM_TYPE byte)."""
-    return spark.createDataFrame(
-        [(name, i) for i, name in enumerate(PLATFORMS)],
-        "PLATFORM string, PLATFORM_TYPE tinyint",
-    )
-
-
 def decode_platform(summary: DataFrame) -> DataFrame:
-    """Inverse dim join: PLATFORM_TYPE byte → platform string (round-trip
-    check surface; code 0 decodes to the blank/unknown entry)."""
-    dim = platform_dim(summary.sparkSession)
-    return summary.join(F.broadcast(dim), on="PLATFORM_TYPE", how="left")
+    """PLATFORM_TYPE byte → platform string (round-trip check surface;
+    code 0 decodes to the blank/unknown entry, an out-of-range code to
+    null)."""
+    names = F.array(*(F.lit(name) for name in PLATFORMS))
+    return summary.withColumn(
+        "PLATFORM", F.try_element_at(names, F.col("PLATFORM_TYPE").cast("int") + 1)
+    )
 
 
 def build_summary(raw: DataFrame) -> DataFrame:
@@ -46,20 +39,19 @@ def build_summary(raw: DataFrame) -> DataFrame:
     - N_PROF: profiles per WMO (toctools.py:167-170)
     - N_LEVELS: levels in the raw file (size of the PRES array)
     - FLAG: POSITION_QC × JULD_QC product (A9, toctools.py:178-187)
-    - PLATFORM_TYPE: int8 dictionary code via a broadcast dim join
-      (toctools.py:195-196 np.vectorize(PLATFORMS.index) → J4 broadcast
-      hash join here; ~40 rows broadcast, zero extra shuffles). Unknown
-      or missing platform strings encode to 0 (the blank entry) — the
-      reference would raise; a 100 TB ingest must not die on one new
-      float model.
+    - PLATFORM_TYPE: int8 dictionary code via a literal map lookup
+      (toctools.py:195-196 np.vectorize(PLATFORMS.index); the ~40-entry
+      dictionary rides in the plan, zero joins and zero extra jobs).
+      Unknown or missing platform strings encode to 0 (the blank
+      entry) — the reference would raise; a 100 TB ingest must not die
+      on one new float model.
     """
-    dim = platform_dim(raw.sparkSession)
-    has_platform = "PLATFORM" in raw.columns
-    if has_platform:
-        raw = raw.join(F.broadcast(dim), on="PLATFORM", how="left")
-    code = (
-        F.coalesce(F.col("PLATFORM_TYPE"), F.lit(0)) if has_platform else F.lit(0)
-    )
+    code = F.lit(0)
+    if "PLATFORM" in raw.columns:
+        codes = F.create_map(
+            *(x for i, name in enumerate(PLATFORMS) for x in (F.lit(name), F.lit(i)))
+        )
+        code = F.coalesce(F.try_element_at(codes, F.col("PLATFORM")), code)
     w = W.partitionBy("WMO")
     w_order = w.orderBy("JULD", "IPROF")
     return raw.select(

@@ -2590,9 +2590,9 @@ def q_argo_atlas_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference-parity pipeline end-to-end (SURVEY §3.1-3.3): synthetic
     raw profiles → summary gates → applyInPandas interpolation onto 64
     levels → materialized parquet intermediate → binned neighborhood
-    join → kernel-weighted TS climatology (A1-A3) → two-pass R14 EAPE
-    (A4: cell-mean → broadcast-back → isopycnal displacement → weighted
-    mean; reference atlas.py:152-191, 281-298).
+    join → kernel-weighted TS climatology (A1-A3) → one-pass R14 EAPE
+    (A4: per cell, mean profile → isopycnal displacement → weighted
+    mean in one group kernel; reference atlas.py:152-191, 281-298).
 
     The interpolated profiles are written to a parquet temp-path and
     read back, so the DuckDB oracle (atlas_oracle.py) brute-forces the
@@ -2646,23 +2646,21 @@ def q_argo_atlas_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
          float(bounds.la_s), float(bounds.la_s) + 2.0 * nlat),
         reso_deg=2.0,
     )
-    # the pair set feeds both the TS and EAPE passes (SURVEY §7.4.2) —
-    # materialize it and the pass-1 means so pass 2 reuses, not
-    # recomputes. localCheckpoint (not persist): a query builder cannot
-    # unpersist after its caller collects, and CacheManager pins
+    # the pair set feeds the TS call and both EAPE calls (SURVEY
+    # §7.4.2) — materialize it so each reuses, not recomputes, the
+    # neighborhood join. localCheckpoint (not persist): a query builder
+    # cannot unpersist after its caller collects, and CacheManager pins
     # persisted relations for the session — checkpointed RDDs are freed
-    # by the ContextCleaner once unreferenced (round-5 review).
+    # by the ContextCleaner once unreferenced (round-5 review). Each
+    # EAPE call derives its cell means in its own one-pass kernel.
     pairs = match_pairs(grid, profiles, reso_deg=2.0, smoothing_factor=4.0
                         ).localCheckpoint(eager=True)
-    ts = clim_ts(grid, profiles, reso_deg=2.0, smoothing_factor=4.0, pairs=pairs
-                 ).localCheckpoint(eager=True)
+    ts = clim_ts(grid, profiles, reso_deg=2.0, smoothing_factor=4.0, pairs=pairs)
     eape = clim_eape(
-        grid, profiles, reso_deg=2.0, smoothing_factor=4.0, pairs=pairs, ts=ts
+        grid, profiles, reso_deg=2.0, smoothing_factor=4.0, pairs=pairs
     )
-    # T25 variant over the SAME checkpointed pairs + broadcast means —
-    # one extra cell kernel, no new shuffle of the pair set
     eape_t25 = clim_eape(
-        grid, profiles, reso_deg=2.0, smoothing_factor=4.0, pairs=pairs, ts=ts,
+        grid, profiles, reso_deg=2.0, smoothing_factor=4.0, pairs=pairs,
         algo="T25",
     )
     out = (

@@ -31,9 +31,9 @@ DATA_MODES = ["R", "D", "A"]  # real-time, delayed, adjusted (toctools.py:25)
 
 # Static platform-type dictionary (reference toctools.py:26-55 keeps the
 # same list as 32-byte padded bytes and encodes via PLATFORMS.index into
-# int8; here the strings are trimmed and the encode is a broadcast dim
-# join in operators/summary.py). Index 0 (blank) doubles as the
-# unknown-platform fallback code.
+# int8; here the strings are trimmed and the encode is a literal map
+# lookup in operators/summary.py — no dim table, no join). Index 0
+# (blank) doubles as the unknown-platform fallback code.
 PLATFORMS = [
     "",
     "ALTO", "APEX", "APEX-SBE", "APEX_D", "ARVOR", "ARVOR_C", "ARVOR_D",

@@ -57,6 +57,26 @@ def _default_driver_mem(cap_gib: int = 48) -> str:
     return f"{gib}g"
 
 
+def _worker_daemon_conf(local: bool) -> dict[str, str]:
+    """``spark.python.daemon.module`` → :mod:`argostats_spark.daemon`
+    (lazy zipimport invalidation, ~0.3 s less per Python task on
+    CPython < 3.13), but only for a local master whose worker daemon can
+    import this package: the daemon inherits this process's working
+    directory and PYTHONPATH, so the package must sit in one of them or
+    in site-packages. Otherwise (e.g. a driver that ships the package
+    with addPyFile only) Spark's own daemon stays."""
+    import site
+
+    if not local:
+        return {}
+    root = os.path.realpath(os.path.dirname(os.path.dirname(__file__)))
+    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+             *site.getsitepackages()]
+    if any(p and os.path.realpath(p) == root for p in paths):
+        return {"spark.python.daemon.module": "argostats_spark.daemon"}
+    return {}
+
+
 def get_spark(
     app_name: str = "argostats_spark",
     master: str | None = None,
@@ -70,13 +90,9 @@ def get_spark(
     ``local[N]`` when nothing else defines one.
     """
     cpus = DEFAULT_CPUS
-    builder = SparkSession.builder.appName(app_name)
-    if master is not None:
-        builder = builder.master(master)
-    elif "SPARK_MASTER" in os.environ:
-        builder = builder.master(os.environ["SPARK_MASTER"])
-    else:
-        builder = builder.master(f"local[{cpus}]")
+    if master is None:
+        master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+    builder = SparkSession.builder.appName(app_name).master(master)
 
     conf = {
         # Local mode runs executors inside the driver JVM, whose default
@@ -110,6 +126,7 @@ def get_spark(
         # single-threaded BLAS inside executor Python workers (see
         # _BLAS_ENV above; executorEnv is the cluster-mode channel)
         **{f"spark.executorEnv.{k}": v for k, v in _BLAS_ENV.items()},
+        **_worker_daemon_conf(master.startswith("local")),
     }
     if extra_conf:
         conf.update(extra_conf)

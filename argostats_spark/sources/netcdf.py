@@ -61,6 +61,15 @@ def _qc_ints(chars):
     return np.where((codes >= 0) & (codes <= 9), codes, 0).astype("i1").reshape(a.shape)
 
 
+def _juld(days: float) -> pd.Timestamp:
+    """Argo JULD (days since 1950-01-01) as a timestamp rounded to whole
+    microseconds, Spark's timestamp unit. The f8 day count leaves
+    sub-microsecond digits (25204.5523611111 d is …23.999998901 s),
+    and the ns→µs Arrow cast raises on them under
+    ``spark.sql.execution.pandas.convertToArrowArraySafely=true``."""
+    return (ARGO_EPOCH + pd.to_timedelta(days, unit="D")).round("us")
+
+
 def parse_argo_classic(path: str, content: bytes) -> pd.DataFrame:
     """REAL parser for NetCDF-3 classic <WMO>_prof.nc bytes — the format
     Argo GDAC core-profile files actually use (the Argo user manual
@@ -104,7 +113,7 @@ def parse_argo_classic(path: str, content: bytes) -> pd.DataFrame:
                 "IPROF": i,
                 "LONGITUDE": float(v["LONGITUDE"][i]),
                 "LATITUDE": float(v["LATITUDE"][i]),
-                "JULD": ARGO_EPOCH + pd.to_timedelta(float(v["JULD"][i]), unit="D"),
+                "JULD": _juld(float(v["JULD"][i])),
                 "DATA_MODE": _DATA_MODE_CODE.get(bytes(v["DATA_MODE"][i]), 0),
                 "PLATFORM": None,
                 "POSITION_QC": int(_qc_ints(v["POSITION_QC"][i : i + 1])[0]),
@@ -155,7 +164,7 @@ def parse_netcdf_bytes(path: str, content: bytes) -> pd.DataFrame:
                 "IPROF": i,
                 "LONGITUDE": float(ds["LONGITUDE"].values[i]),
                 "LATITUDE": float(ds["LATITUDE"].values[i]),
-                "JULD": pd.Timestamp(ds["JULD"].values[i]),
+                "JULD": pd.Timestamp(ds["JULD"].values[i]).round("us"),
                 "DATA_MODE": {"R": 0, "D": 1, "A": 2}.get(
                     str(ds["DATA_MODE"].values[i]), 0
                 ),

@@ -153,11 +153,9 @@ def atlas_refresh_writer(
             .parquet(f"{pair_store}/batch=*")
             .localCheckpoint(eager=True)
         )
-        ts = clim_ts(
-            grid, None, reso_deg, smoothing_factor, pairs=pairs
-        ).localCheckpoint(eager=True)
+        ts = clim_ts(grid, None, reso_deg, smoothing_factor, pairs=pairs)
         eape = clim_eape(
-            grid, None, reso_deg, smoothing_factor, pairs=pairs, ts=ts, algo=algo
+            grid, None, reso_deg, smoothing_factor, pairs=pairs, algo=algo
         )
         out = ts.join(
             eape.select("glon", "glat", "RHO", "EAPE"), on=["glon", "glat"]

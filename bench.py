@@ -767,13 +767,13 @@ def main() -> None:
 
         # EAPE (VERDICT r8 item 3): the reference's costliest
         # computation (reference atlas.py:439-448) was correctness-
-        # covered but never timed — a plan regression in the two-pass
-        # cached-pair dataflow (pass-1 cell means broadcast back onto
-        # the pair set, per-pair displacement kernel, weighted mean)
-        # would never trip a wire. Regional 5 deg box (100x70 deg, 280
-        # cells), R14 kernel, same profiles/smoothing as the atlas row
-        # so the numbers are comparable; pairs/ts recomputed inside
-        # each run — the measured time IS the full two-pass dataflow.
+        # covered but never timed — a plan regression in the EAPE
+        # dataflow (pair exchange, then one kernel per cell: mean
+        # profile, per-pair displacement, weighted mean) would never
+        # trip a wire. Regional 5 deg box (100x70 deg, 280 cells), R14
+        # kernel, same profiles/smoothing as the atlas row so the
+        # numbers are comparable; pairs recomputed inside each run —
+        # the measured time IS the full EAPE dataflow.
         from argostats_spark.operators.atlas import clim_eape
 
         egrid = make_grid(spark, (-80.0, 20.0, -60.0, 10.0), reso_deg=5.0)

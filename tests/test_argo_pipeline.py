@@ -70,7 +70,7 @@ def test_summary_shape_and_iprof(spark, raw):
 
 
 def test_platform_type_dictionary_roundtrip(spark, raw):
-    """PLATFORM strings encode to int8 codes via the broadcast dim join
+    """PLATFORM strings encode to int8 codes via the literal map lookup
     (reference toctools.py:26-55, 195-196) and decode back to the same
     strings; unknown platforms encode to 0 (blank)."""
     from argostats_spark.operators.summary import decode_platform
@@ -781,19 +781,70 @@ def test_clim_ts_arrow_engine_equals_pandas(spark, profiles):
     pd.testing.assert_frame_equal(a, p)
 
 
-def test_eape_arrow_engine_equals_pandas(spark, profiles):
-    """Round 14: the EAPE cell kernel gets the same Arrow twin the TS
-    kernel got in round 5. Both transports must produce identical rows
-    on the legacy per-pair payload for BOTH algorithms, so the
-    transport choice stays a pure performance decision."""
-    import pandas as pd
+def _two_pass_eape(pairs, ts, theta: float, algo: str):
+    """The two-pass EAPE composition clim_eape replaced: clim_ts's
+    stored (f4) cell means broadcast-joined back onto the repartitioned
+    pairs, then _eape_integrand and the weighted mean per cell."""
+    import pyarrow as pa
 
-    from argostats_spark.operators.atlas import (
-        clim_eape,
-        clim_ts,
-        make_grid,
-        match_pairs,
+    from argostats_spark.functions.teos10 import eape_unit, rho
+    from argostats_spark.operators.atlas import _EAPE_SCHEMA, _eape_integrand
+
+    pref = pref64().astype("f8")
+    unit = eape_unit()
+
+    def kernel(key, table):
+        n = table.num_rows
+
+        def mat(name):
+            return (
+                table.column(name).combine_chunks().flatten()
+                .to_numpy(zero_copy_only=False).astype("f8").reshape(n, NLEVELS)
+            )
+
+        ct_bar = np.asarray(table.column("CT_BAR")[0].as_py(), dtype="f8")
+        sr_bar = np.asarray(table.column("SR_BAR")[0].as_py(), dtype="f8")
+        hav = table.column("hav").to_numpy(zero_copy_only=False).astype("f8")
+        coef = np.exp(-hav / theta)[:, None] * mat("IDX")
+        n_lev = coef.sum(axis=0)
+        ok = n_lev > 0
+        ct, sr = mat("CT"), mat("SR")
+        rho_bar = rho(sr_bar, ct_bar, pref)
+        eape_i = _eape_integrand(
+            rho(sr, ct, pref[None, :]), sr, ct, rho_bar, ct_bar, sr_bar,
+            pref, unit, algo,
+        )
+        eape = np.zeros(NLEVELS)
+        eape[ok] = (coef * eape_i).sum(axis=0)[ok] / n_lev[ok]
+        offs = pa.array(np.array([0, NLEVELS], dtype="i4"))
+        return pa.table({
+            "glon": pa.array([float(key[0].as_py())]),
+            "glat": pa.array([float(key[1].as_py())]),
+            "n_points": pa.array([n], pa.int32()),
+            "RHO": pa.ListArray.from_arrays(offs, pa.array(rho_bar.astype("f4"))),
+            "EAPE": pa.ListArray.from_arrays(offs, pa.array(eape.astype("f4"))),
+        })
+
+    means = ts.select(
+        "glon", "glat", F.col("CT").alias("CT_BAR"), F.col("SR").alias("SR_BAR")
     )
+    n = pairs.sparkSession.sparkContext.defaultParallelism
+    return (
+        pairs.select("glon", "glat", "hav", "CT", "SR", "IDX")
+        .repartition(n, "glon", "glat")
+        .join(F.broadcast(means), on=["glon", "glat"])
+        .groupBy("glon", "glat").applyInArrow(kernel, _EAPE_SCHEMA)
+    )
+
+
+def test_eape_one_pass_equals_two_pass_composition(spark, profiles):
+    """clim_eape derives each cell's mean profile inside its own group
+    kernel (rounded through f4, as clim_ts stores it). Its rows must
+    equal the two-pass composition — clim_ts means, then the per-pair
+    integrand against them — EXACTLY, for R14 and T25, with the cached
+    pair set passed in and with the pair set built inside clim_eape
+    (for T25 that is the per-profile feature path)."""
+    import math
 
     b = profiles.filter(
         (F.col("FLAG") == 1) & (F.col("DATA_MODE") == 1)
@@ -804,15 +855,16 @@ def test_eape_arrow_engine_equals_pandas(spark, profiles):
     grid = make_grid(
         spark, (float(b.w), float(b.e) + 2, float(b.s), float(b.n) + 2), reso_deg=5.0
     )
+    theta = math.sin(math.radians(2.0 * 5.0) / 2.0) ** 2
     pairs = match_pairs(grid, profiles, 5.0, 2.0).localCheckpoint(eager=True)
     ts = clim_ts(grid, profiles, 5.0, 2.0, pairs=pairs).localCheckpoint(eager=True)
     for algo in ("R14", "T25"):
-        a = clim_eape(grid, profiles, 5.0, 2.0, pairs=pairs, ts=ts,
-                      algo=algo, engine="arrow").orderBy("glon", "glat").toPandas()
-        p = clim_eape(grid, profiles, 5.0, 2.0, pairs=pairs, ts=ts,
-                      algo=algo, engine="pandas").orderBy("glon", "glat").toPandas()
-        assert len(a) > 0
-        pd.testing.assert_frame_equal(a, p)
+        want = _two_pass_eape(pairs, ts, theta, algo).orderBy("glon", "glat").toPandas()
+        assert len(want) > 0
+        for got in (clim_eape(grid, profiles, 5.0, 2.0, pairs=pairs, algo=algo),
+                    clim_eape(grid, profiles, 5.0, 2.0, algo=algo)):
+            got = got.orderBy("glon", "glat").toPandas()
+            pd.testing.assert_frame_equal(got, want, check_exact=True)
 
 
 def test_eape_fast_path_equals_legacy_pairs_path(spark, profiles):
@@ -845,7 +897,7 @@ def test_eape_fast_path_equals_legacy_pairs_path(spark, profiles):
     pairs = match_pairs(grid, profiles, 5.0, 2.0).localCheckpoint(eager=True)
     ts = clim_ts(grid, profiles, 5.0, 2.0, pairs=pairs).localCheckpoint(eager=True)
     for algo in ("R14", "T25"):
-        legacy = clim_eape(grid, profiles, 5.0, 2.0, pairs=pairs, ts=ts,
+        legacy = clim_eape(grid, profiles, 5.0, 2.0, pairs=pairs,
                            algo=algo).orderBy("glon", "glat").toPandas()
         fast = clim_eape(grid, profiles, 5.0, 2.0,
                          algo=algo).orderBy("glon", "glat").toPandas()
@@ -861,40 +913,86 @@ def test_eape_fast_path_equals_legacy_pairs_path(spark, profiles):
 
 
 def test_eape_fast_path_plan_exchange_excludes_bar_arrays(spark, profiles):
-    """Round 14 plan pin: in clim_eape the broadcast means join-back
-    attaches ABOVE the pair repartition, so the per-cell CT_BAR/SR_BAR
-    arrays never cross the pair exchange, and the BroadcastHashJoin's
-    preserved partitioning feeds the kernel's groupBy with NO second
-    exchange. Guards the round-14 reorder against a future Spark
-    version (or refactor) silently re-inserting either cost."""
+    """Plan pin of the one-pass EAPE: ONE exchange, hash-partitioned by
+    (glon, glat), straight under ONE FlatMapGroupsInArrow — no join
+    between them (the cell means are computed in the kernel, not joined
+    back), no *_BAR column anywhere, and the exchange ships only what
+    the kernel reads (no lon/lat join coordinates). R14 ships the
+    per-pair CT/SR; T25 ships the per-profile EI plus CT/SR for the
+    cell means."""
     from argostats_spark.operators.atlas import clim_eape, make_grid
 
     grid = make_grid(spark, (-180.0, 180.0, -60.0, 64.0), reso_deg=10.0)
-    # R14 ships the legacy per-pair payload (CT/SR — its
-    # cell-independent part is one density evaluation, measured not
-    # worth the extra Python pass); T25 ships the per-profile EI
-    for algo, feat in (("R14", " CT#"), ("T25", "EI")):
+    for algo, cols in (("R14", (" CT#", " SR#")), ("T25", (" CT#", " SR#", " EI#"))):
         df = clim_eape(grid, profiles, 10.0, 2.0, algo=algo)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        kernel_pos = plan.index("FlatMapGroupsIn")
-        join_pos = plan.index("BroadcastHashJoin")
+        assert "_BAR" not in plan, plan[:2000]
+        # the cached profiles print their own lineage (the interpolation
+        # kernel) inside InMemoryRelation; the EAPE plan is the prefix
+        plan = plan.partition("InMemoryRelation")[0]
+        assert plan.count("FlatMapGroupsInArrow") == 1, plan[:2000]
+        assert plan.count("Exchange hashpartitioning(glon") == 1, plan[:2000]
+        kernel_pos = plan.index("FlatMapGroupsInArrow")
         exch_pos = plan.index("Exchange hashpartitioning(glon")
-        assert kernel_pos < join_pos < exch_pos, plan[:2000]
-        # the repartition exchange row: payload must be the pruned
-        # set — no BAR arrays, no lon/lat join coordinates
+        assert kernel_pos < exch_pos
+        assert "Join" not in plan[kernel_pos:exch_pos], plan[:2000]
         exch_line = next(
             line for line in plan.splitlines()
             if "Exchange hashpartitioning(glon" in line
         )
-        # the project feeding the kernel (above the join) carries BARs;
-        # the exchange input (the project directly under it) must not
-        after = plan[plan.index(exch_line):]
-        under = after.splitlines()[1]
-        assert "CT_BAR" not in under and "SR_BAR" not in under, under
-        assert feat in under, under
+        under = plan[plan.index(exch_line):].splitlines()[1]
+        for col in cols:
+            assert col in under, under
         assert " lon#" not in under, under
-        if algo == "T25":
-            assert " CT#" not in under, under
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs one call runs, from the status tracker's job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_jobs_per_call_pinned(spark, tmp_path):
+    """Per-call Spark job counts of the argo pass on a tiny stored
+    input (driver and per-job overhead, not kernel math, set the wall
+    time at small scale): build_summary 2 (the window's exchange and
+    the result — no platform dim broadcast), estimate_pair_count 3
+    (one tagged union counted per bin, then the scalar), clim_ts_auto
+    and clim_eape 3 each (grid broadcast, pair exchange, result — no
+    grid cross join, no means pass or join-back)."""
+    from argostats_spark.operators.atlas import clim_ts_auto, estimate_pair_count
+
+    make_raw(spark, n_wmos=2, profiles_per_wmo=4, seed=3).write.parquet(str(tmp_path / "raw"))
+    raw = spark.read.parquet(str(tmp_path / "raw"))
+    write_profiles(interpolate_profiles(raw), str(tmp_path / "store"))
+    stored = spark.read.parquet(str(tmp_path / "store"))
+    # global: a grid the tiny input surely reaches, so no stage is
+    # skipped for an empty side
+    grid = make_grid(spark, (-180.0, 180.0, -80.0, 80.0), reso_deg=5.0)
+
+    def noop(df):
+        return lambda: df.write.format("noop").mode("overwrite").save()
+
+    calls = {
+        "build_summary": noop(build_summary(raw)),
+        "estimate_pair_count": lambda: estimate_pair_count(grid, stored, 5.0, 2.0),
+        "clim_ts_auto": noop(clim_ts_auto(grid, stored, 5.0, 2.0, variant="kernel")),
+        "clim_eape": noop(clim_eape(grid, stored, 5.0, 2.0, algo="R14")),
+    }
+    got = {name: _jobs(spark, fn) for name, fn in calls.items()}
+    assert got == {
+        "build_summary": 2, "estimate_pair_count": 3, "clim_ts_auto": 3, "clim_eape": 3,
+    }
 
 
 def test_netcdf3_cdf2_spec_fixture_and_roundtrip(tmp_path):

@@ -267,20 +267,13 @@ def test_registry_plans_free_of_antipatterns(spark, sf_dir):
     assert not offenders, f"scale antipatterns compiled into: {offenders}"
 
 
-def test_eape_two_pass_reuses_cached_pairs_and_broadcasts_means(spark):
-    """SURVEY §7.4.2: the EAPE second pass must consume the CACHED pair
-    set and the CACHED pass-1 means (not re-derive either lineage), and
-    the cell-means join-back must be a broadcast — re-shuffling the pair
-    set against a per-cell table of a few thousand rows would be the
-    100 TB mistake. With both inputs materialized, the EAPE plan
-    collapses to: two InMemoryTableScans, ONE broadcast join for the
-    means, ONE Python kernel (the EAPE cell kernel itself)."""
-    from argostats_spark.operators.atlas import (
-        clim_eape,
-        clim_ts,
-        make_grid,
-        match_pairs,
-    )
+def test_eape_one_pass_reuses_cached_pairs(spark):
+    """SURVEY §7.4.2: clim_eape must consume the CACHED pair set (not
+    re-derive its lineage) and compute each cell's mean profile inside
+    its own group kernel — no pass-1 means, no join-back. With the pair
+    set materialized the EAPE plan collapses to: one InMemoryTableScan,
+    ONE (glon, glat) exchange, ONE Python kernel, no join."""
+    from argostats_spark.operators.atlas import clim_eape, make_grid, match_pairs
     from argostats_spark.operators.interpolation import interpolate_profiles
     from argostats_spark.sources.synthetic import make_raw
 
@@ -288,24 +281,21 @@ def test_eape_two_pass_reuses_cached_pairs_and_broadcasts_means(spark):
     profiles = interpolate_profiles(raw)
     grid = make_grid(spark, (-180.0, 180.0, -60.0, 64.0), reso_deg=10.0)
     pairs = match_pairs(grid, profiles, 10.0, 2.0).persist()
-    ts = clim_ts(grid, profiles, 10.0, 2.0, pairs=pairs).persist()
     try:
-        pairs.count(), ts.count()  # materialize: lineage collapses
-        eape = clim_eape(grid, profiles, 10.0, 2.0, pairs=pairs, ts=ts)
+        pairs.count()  # materialize: lineage collapses
+        eape = clim_eape(grid, profiles, 10.0, 2.0, pairs=pairs)
         plan = physical_plan(eape)
-        # plan text embeds each cached relation's ORIGINAL lineage inside
-        # its InMemoryRelation description; the pass-2 skeleton is the
-        # prefix before the first such description (depth-first print:
-        # kernel → repartition → join → stream-side cache scan)
-        pre, _, rest = plan.partition("InMemoryRelation")
+        # plan text embeds the cached relation's ORIGINAL lineage inside
+        # its InMemoryRelation description; the EAPE skeleton is the
+        # prefix before it (kernel → exchange → cache scan)
+        pre, _, _ = plan.partition("InMemoryRelation")
         assert pre.count("FlatMapGroupsIn") == 1, pre      # ONLY the EAPE kernel
-        assert pre.count("BroadcastHashJoin") == 1, pre    # means join-back
+        assert pre.count("Exchange hashpartitioning(glon") == 1, pre
         assert pre.count("InMemoryTableScan") == 1, pre    # cached pair set
-        assert "SortMergeJoin" not in pre, pre
-        # the broadcast build side reads the cached pass-1 means
-        assert "InMemoryTableScan" in rest and "CT_BAR" in pre, plan
+        assert "Join" not in pre, pre                      # no means join-back
+        assert "_BAR" not in plan, plan
     finally:
-        pairs.unpersist(), ts.unpersist()
+        pairs.unpersist()
 
 
 def test_text_suite_is_pure_scan_project(spark, sf):

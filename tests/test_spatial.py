@@ -9,6 +9,7 @@ atlas.py:502).
 from __future__ import annotations
 
 import math
+from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -16,7 +17,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from argostats_spark.functions.geo import haversine_arg
-from argostats_spark.operators.spatial import kernel_weighted_mean, neighborhood_join
+from argostats_spark.operators.spatial import (
+    explode_neighbor_bins,
+    kernel_weighted_mean,
+    neighborhood_join,
+)
 
 
 def _brute_force(spark, grid_pdf, pts_pdf, radius_deg):
@@ -37,6 +42,7 @@ def _brute_force(spark, grid_pdf, pts_pdf, radius_deg):
         ((-40, 40), (-50, 50), 5.0),
         ((60, 85), (55, 88), 8.0),     # meridian convergence
         ((-80, -60), (-85, -55), 12.0),
+        ((84, 86), (80, 90), 10.0),    # lon reach wider than the ring
     ],
 )
 def test_binned_equals_brute_force(spark, case):
@@ -58,12 +64,25 @@ def test_binned_equals_brute_force(spark, case):
         spark.createDataFrame(grid_pdf), spark.createDataFrame(pts_pdf),
         radius_deg=radius,
     )
-    want = {(r.cell_id, r.pt_id) for r in brute.select("cell_id", "pt_id").collect()}
-    got = {(r.cell_id, r.pt_id) for r in binned.select("cell_id", "pt_id").collect()}
+    # multisets: a pair the join emits twice double-weights its point
+    want = Counter((r.cell_id, r.pt_id) for r in brute.select("cell_id", "pt_id").collect())
+    got = Counter((r.cell_id, r.pt_id) for r in binned.select("cell_id", "pt_id").collect())
     missing = want - got
     extra = got - want
     assert not missing, f"binned join dropped true pairs: {sorted(missing)[:10]}"
-    assert not extra, f"binned join kept out-of-radius pairs: {sorted(extra)[:10]}"
+    assert not extra, f"binned join kept extra pairs: {sorted(extra)[:10]}"
+
+
+def test_cross_pole_pair_emitted_once(spark):
+    """Near a pole the longitude reach of the radius spans more than the
+    whole bin ring (2·klon+1 > nlon): the cover must still hold each
+    (cell, bin) once — 3 lat bins × 36 lon bins — and the pair across
+    the pole must come out once."""
+    grid = spark.createDataFrame(pd.DataFrame({"glon": [0.5], "glat": [85.0]}))
+    pts = spark.createDataFrame(pd.DataFrame({"lon": [-179.5], "lat": [87.0]}))
+    cover = explode_neighbor_bins(grid, "glon", "glat", 10.0, 10.0)
+    assert cover.count() == cover.distinct().count() == 108
+    assert neighborhood_join(grid, pts, radius_deg=10.0).count() == 1
 
 
 def test_wraparound_pair_found(spark):

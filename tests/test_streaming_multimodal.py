@@ -461,6 +461,34 @@ def test_netcdf_classic_ingest_real_parser(spark, tmp_path):
     assert r0["PRES_QC"] == [1] * 30
 
 
+def test_netcdf_ingest_sub_microsecond_juld_under_safe_arrow_cast(spark, tmp_path):
+    """A realistic f8 JULD leaves sub-microsecond digits once turned
+    into nanoseconds; the parser rounds to whole microseconds, so the
+    ns→µs Arrow cast passes even with
+    convertToArrowArraySafely=true (it raised ArrowInvalid before)."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from argostats_spark.sources.netcdf import ingest_gdac, write_argo_prof_nc
+
+    d = tmp_path / "gdac" / "aoml" / "1900001"
+    d.mkdir(parents=True)
+    write_argo_prof_nc(
+        str(d), 1900001, [10.0], [-20.0], [25204.5523611111], "D",
+        np.array([[5.0, 10.0]]), np.array([[20.0, 19.0]]), np.array([[35.0, 35.1]]),
+    )
+    key = "spark.sql.execution.pandas.convertToArrowArraySafely"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        raw = ingest_gdac(spark, str(tmp_path / "gdac" / "*" / "*" / "*_prof.nc"))
+        rows = raw.select(F.unix_micros("JULD").alias("us")).collect()
+    finally:
+        spark.conf.set(key, before)
+    # 1546521323.999998901 s since the Unix epoch, to the nearest µs
+    assert [r.us for r in rows] == [1546521323999999]
+
+
 def test_argo_gdac_python_datasource(spark, tmp_path):
     """spark.read.format("argo_gdac") — the Spark 4 Python Data Source
     wrapper must produce exactly the rows of the binaryFile ingest on
@@ -1092,7 +1120,7 @@ def test_streaming_atlas_refresh_equals_batch(spark, tmp_path):
 
     full = spark.read.parquet(prof_dir)
     ts = clim_ts(grid, full, 10.0, 2.0).localCheckpoint(eager=True)
-    eape = clim_eape(grid, full, 10.0, 2.0, ts=ts)
+    eape = clim_eape(grid, full, 10.0, 2.0)
     want = (
         ts.join(eape.select("glon", "glat", "RHO", "EAPE"), on=["glon", "glat"])
         .toPandas().sort_values(["glon", "glat"]).reset_index(drop=True)
