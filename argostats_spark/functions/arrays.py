@@ -62,12 +62,6 @@ def array_weighted_sum(values, weight) -> Column:
     return F.transform(_c(values), lambda x: x * _c(weight))
 
 
-def masked_array(values, mask) -> Column:
-    """Zero out invalid levels: x[k] * idx[k] (reference atlas.py:109
-    ``coef = c * idx``)."""
-    return F.zip_with(_c(values), _c(mask), lambda x, m: x * m.cast("float"))
-
-
 def dot_product(a, b) -> Column:
     """Σ a[k]·b[k] via zip_with + aggregate (JVM-side, codegen-able)."""
     prods = F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double"))
@@ -84,9 +78,3 @@ def cosine_similarity(a, b) -> Column:
     num = dot_product(a, b)
     den = l2_norm(a) * l2_norm(b)
     return F.when(den > F.lit(0.0), num / den)
-
-
-def array_sorted_distinct(arr) -> Column:
-    """Sorted unique values (reference interpolation.py:234-249
-    ``np.unique`` on pressure levels), intra-row."""
-    return F.array_sort(F.array_distinct(_c(arr)))

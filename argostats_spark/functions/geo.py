@@ -68,12 +68,6 @@ def dist_threshold(reso_deg: float, smoothing_factor: float = 4.0) -> float:
     return math.sin(math.radians(smoothing_factor * reso_deg) / 2.0) ** 2
 
 
-def cutoff_radius_deg(reso_deg: float, smoothing_factor: float = 4.0) -> float:
-    """Kernel support radius in degrees — the bin width lower bound for the
-    neighborhood join (SURVEY.md §7.4 item 1)."""
-    return smoothing_factor * reso_deg
-
-
 def lon_bin(lon, bin_deg: float) -> Column:
     """Integer longitude bin of width ``bin_deg`` (origin -180)."""
     return F.floor((_c(lon) + F.lit(180.0)) / F.lit(bin_deg)).cast("int")

@@ -6,11 +6,11 @@ fill_value="extrapolate")`` (reference: src/argostats/interpolation.py:
 13-21). scipy is not installed here, so ``cubic_interp`` is a natural
 cubic spline implemented directly in NumPy (the standard tridiagonal
 algorithm — public textbook material), preferring scipy when available.
-``linear_interp`` wraps np.interp (the reference's isopycnal displacement
-lookup, atlas.py:187).
+``linear_interp_extrap`` is np.interp with linear extrapolation at both
+ends (the fallback for spans too short for a spline).
 
-Both run inside Arrow-batched pandas UDFs / applyInPandas — per-profile
-vectorized work, never row-at-a-time Python.
+Both run inside the Arrow group kernel of operators/interpolation.py —
+per-profile vectorized work, never row-at-a-time Python.
 """
 
 from __future__ import annotations
@@ -130,10 +130,3 @@ def linear_interp_extrap(x: np.ndarray, y: np.ndarray, xq: np.ndarray) -> np.nda
             s = (y[-1] - y[-2]) / (x[-1] - x[-2])
             out[hi] = y[-1] + s * (xq[hi] - x[-1])
     return out
-
-
-def monotone_lookup(rho_q: np.ndarray, rho_prof: np.ndarray, pref: np.ndarray) -> np.ndarray:
-    """np.interp(rho·CF, RHO·CF, PREF) — the reference's isopycnal
-    displacement lookup (atlas.py:187). Assumes rho_prof monotone
-    non-decreasing (guaranteed by construction in the EAPE pass)."""
-    return np.interp(rho_q, rho_prof, pref)

@@ -33,11 +33,3 @@ def all_good(qc_array) -> Column:
     """Per-level QC: true iff every level code == 1 (interpolation.py:
     174-179 expressed with the ``forall`` higher-order function)."""
     return F.forall(_c(qc_array), lambda q: q == F.lit(1))
-
-
-def good_level_mask(qc_array) -> Column:
-    """Byte mask per level: 1 where QC==1 else 0 — the IDX-style validity
-    array (interpolation.py:130-134)."""
-    return F.transform(
-        _c(qc_array), lambda q: F.when(q == F.lit(1), F.lit(1)).otherwise(F.lit(0)).cast("byte")
-    )

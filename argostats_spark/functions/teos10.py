@@ -135,7 +135,7 @@ def _powers(v: np.ndarray, n: int) -> np.ndarray:
 def _poly3(C: np.ndarray, xs, ys, z):
     """Evaluate Σ C[a,b,c]·xs^a·ys^b·z^c as one einsum contraction —
     the polynomial runs inside C loops regardless of batch shape, so the
-    per-cell applyInPandas kernels (EAPE: rho on (n_pairs, 64) blocks)
+    per-cell Arrow group kernels (EAPE: rho on (n_pairs, 64) blocks)
     pay ~20 numpy calls instead of 343 Python-level Horner steps."""
     xs, ys, z = np.broadcast_arrays(xs, ys, z)
     shape = xs.shape

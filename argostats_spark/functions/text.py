@@ -2,7 +2,7 @@
 
 Green-field scope beyond the reference (a training-data pipeline needs
 these at 100 TB): language-ID heuristics, quality scoring, token
-counting, and rolling-hash fingerprints. Everything here is built-in
+counting, repetition stats and normalization. Everything here is built-in
 ``pyspark.sql.functions`` — JVM-side, codegen'd, no Python in the hot
 path — so the same expressions run unchanged over petabyte scans.
 """
@@ -35,26 +35,6 @@ def tokens(text) -> Column:
 def token_count(text) -> Column:
     """Whitespace token count — the cheap tokenizer."""
     return F.size(tokens(text)).cast("long")
-
-
-def bpe_ish_token_count(text) -> Column:
-    """BPE-ish subword count: word-boundary pieces + digit runs +
-    punctuation singles, via one regex pass. A deterministic, cluster-safe
-    proxy for a real tokenizer's token count."""
-    t = _c(text)
-    pieces = F.filter(
-        F.split(t, r"(?<=\W)|(?=\W)"),
-        lambda p: F.trim(p) != F.lit(""),
-    )
-    return F.size(pieces).cast("long")
-
-
-def stopword_ratio(text, lang: str = "en") -> Column:
-    toks = F.transform(tokens(text), lambda t: F.lower(t))
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    n_sw = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    n = F.size(toks)
-    return F.when(n > 0, n_sw.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
 
 
 def punct_ratio(text) -> Column:
@@ -286,12 +266,6 @@ def char_entropy(text, chars: Column | None = None) -> Column:
         lambda acc, c: acc + (c / n) * F.log2(c / n),
     )
     return F.when(F.length(t) > 0, F.round(h, 6)).otherwise(F.lit(0.0))
-
-
-def fingerprint64(text) -> Column:
-    """64-bit document fingerprint via xxhash64 — the rolling-hash
-    fingerprinting operator; stable across executors."""
-    return F.xxhash64(_c(text))
 
 
 def normalize_text(text) -> Column:

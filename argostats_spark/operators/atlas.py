@@ -34,7 +34,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -171,35 +170,9 @@ def _cell_weights(table, theta: float) -> tuple[np.ndarray, np.ndarray]:
     return coef, coef.sum(axis=0)
 
 
-def _ts_cell_kernel(theta: float):
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        limit_blas_threads()
-        glon, glat = key
-        w = np.exp(-pdf["hav"].to_numpy(dtype="f8") / theta)          # (n,)
-        idx = np.stack(pdf["IDX"].to_numpy()).astype("f8")            # (n, 64)
-        ct = np.stack(pdf["CT"].to_numpy()).astype("f8")
-        sr = np.stack(pdf["SR"].to_numpy()).astype("f8")
-        coef = w[:, None] * idx                                       # (n, 64)
-        n_lev = coef.sum(axis=0)                                      # (64,)
-        ct_m, sr_m = _level_means(coef, n_lev, ct, sr)
-        return pd.DataFrame(
-            {
-                "glon": [float(glon)],
-                "glat": [float(glat)],
-                "n_points": [len(pdf)],
-                "CT": [ct_m.astype("f4").tolist()],
-                "SR": [sr_m.astype("f4").tolist()],
-                "W": [n_lev.astype("f4").tolist()],
-            }
-        )
-
-    return kernel
-
-
 def _ts_cell_kernel_arrow(theta: float):
-    """Arrow twin of _ts_cell_kernel (row-identical, pinned by test) —
-    the DEFAULT since round 5: re-measured at ≥10⁵ cells (VERDICT r4
-    item 6) it wins at every group shape; see the clim_ts docstring."""
+    """Per-cell weighted means of CT/SR over the cell's pair group, on
+    the Arrow batch (flat list buffers, no pandas object columns)."""
 
     def kernel(key, table):
         limit_blas_threads()
@@ -242,22 +215,17 @@ def clim_ts(
     reso_deg: float,
     smoothing_factor: float = 4.0,
     pairs: DataFrame | None = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Weighted-mean CT/SR climatology per ocean grid cell (the
-    reference's clim_TS, atlas.py:427-437 → proceed_TS_tile:256-279).
+    reference's clim_TS, atlas.py:427-437 → proceed_TS_tile:256-279):
+    one Arrow group kernel per cell (applyInArrow).
 
-    ``engine``: "arrow" (default) or "pandas" — row-identical, pinned by
-    test. RE-MEASURED round 5 at the 1/4°-global group shape the
-    earlier 2k-cell measurement could not see (scripts/bench_atlas.py,
-    local[32], warm-min of 3): 128k cells / 4.3M pairs — arrow 7.3s vs
-    pandas 38.3s (5.3×) vs exploded 27.8s; 400 cells / 454k pairs —
-    arrow 1.7s vs pandas 5.5s (3.2×). The flat-buffer transport also
-    ran far steadier across runs (pandas object-column batches churn
-    the worker GC: 15-47s spread). This retires round 4's
-    "pandas wins at small groups" note — arrow wins at every measured
-    cell count; "pandas" remains as the fallback where applyInArrow is
-    unavailable."""
+    Measured in round 5 at the 1/4°-global group shape
+    (scripts/bench_atlas.py, local[32], warm-min of 3): 128k cells /
+    4.3M pairs — the Arrow kernel 7.3s vs an applyInPandas kernel 38.3s
+    (5.3×) vs exploded 27.8s; 400 cells / 454k pairs — 1.7s vs 5.5s
+    (3.2×). clim_ts_exploded is the independent reference the tests
+    compare this kernel against."""
     theta = math.sin(math.radians(smoothing_factor * reso_deg) / 2.0) ** 2
     if pairs is None:
         pairs = match_pairs(grid, profiles, reso_deg, smoothing_factor)
@@ -265,15 +233,15 @@ def clim_ts(
     # bytes, not UDF CPU — see interpolation.py note)
     n = pairs.sparkSession.sparkContext.defaultParallelism
     # ship only what the kernel reads (round 14, guide §4.1):
-    # applyInArrow/applyInPandas forward EVERY input column into the
-    # Python worker, so the join's lon/lat (16 B/pair, unused by the
-    # kernel) would otherwise cross the repartition exchange AND the
-    # Arrow boundary on every pair row
-    pairs = pairs.select("glon", "glat", "hav", "CT", "SR", "IDX")
-    grouped = pairs.repartition(n, "glon", "glat").groupBy("glon", "glat")
-    if engine == "arrow" and hasattr(grouped, "applyInArrow"):
-        return grouped.applyInArrow(_ts_cell_kernel_arrow(theta), _TS_SCHEMA)
-    return grouped.applyInPandas(_ts_cell_kernel(theta), _TS_SCHEMA)
+    # applyInArrow forwards EVERY input column into the Python worker,
+    # so the join's lon/lat (16 B/pair, unused by the kernel) would
+    # otherwise cross the repartition exchange AND the Arrow boundary
+    # on every pair row
+    return (
+        pairs.select("glon", "glat", "hav", "CT", "SR", "IDX")
+        .repartition(n, "glon", "glat").groupBy("glon", "glat")
+        .applyInArrow(_ts_cell_kernel_arrow(theta), _TS_SCHEMA)
+    )
 
 
 def clim_ts_exploded(
@@ -288,14 +256,15 @@ def clim_ts_exploded(
     entirely in whole-stage codegen, reassemble arrays with
     sort_array(collect_list(...)).
 
-    Tradeoff vs the applyInPandas kernel: 64× the shuffle rows but no
-    Python workers and true partial aggregation (map-side combine
-    shrinks the exchange to |cells|×64 rows regardless of pair count).
+    Tradeoff vs the Arrow group kernel (clim_ts): 64× the shuffle rows
+    but no Python workers and true partial aggregation (map-side
+    combine shrinks the exchange to |cells|×64 rows regardless of pair
+    count).
 
     ATLAS_BENCH (scripts/bench_atlas.py, local[32], 454k pairs / 400
-    cells): applyInPandas 2.2s vs exploded 3.9s warm — the Arrow batch +
-    NumPy matrix kernel wins at regional scale, so it is the default
-    (clim_ts). The exploded form bounds its EXCHANGE by map_tasks ×
+    cells): a pandas group kernel 2.2s vs exploded 3.9s warm — the
+    batched NumPy matrix kernel wins at regional scale (the Arrow
+    kernel by more, see clim_ts), so it is the default (clim_ts). The exploded form bounds its EXCHANGE by map_tasks ×
     |cells| × 64 partial-agg rows independent of pair count, where the
     kernel variant shuffles the full pair set with arrays attached
     (~850 B/pair). Measured at sf1-equivalent (3M profiles, 352M pairs,
@@ -340,8 +309,9 @@ def clim_ts_exploded(
     )
 
 
-# measured pair-shuffle cost of the applyInPandas variant: ~850 bytes
-# per (cell, profile) pair with the 64-level arrays attached (SCALE.md)
+# measured pair-shuffle cost of the group-kernel variant (clim_ts):
+# ~850 bytes per (cell, profile) pair with the 64-level arrays attached
+# (SCALE.md)
 PAIR_SHUFFLE_BYTES = 850
 
 
@@ -405,7 +375,7 @@ def clim_ts_auto(
 ) -> DataFrame:
     """A3 with automatic physical-variant selection (the SCALE.md
     crossover, previously a caller choice): estimate the pair-set
-    shuffle of the applyInPandas kernel; if it fits the budget the
+    shuffle of the clim_ts group kernel; if it fits the budget the
     Arrow+NumPy kernel wins (measured 2.6-2.9×), otherwise route to the
     exploded expression aggregate whose exchange is pair-count-
     independent (map-side combine to |cells|×64 rows) — a global polar-

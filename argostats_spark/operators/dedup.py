@@ -182,23 +182,6 @@ def _validate_index(index: DataFrame, num_hashes: int, hasher: str, fn: str) -> 
         )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 8,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(doc_id, mh_0..mh_{k-1}) signature table: salted xxhash64 min per
-    shingle set, as partial aggregates over the exploded shingle table."""
-    sh = shingle_table(df, id_col, text_col, shingle_n, unique=False)
-    aggs = [
-        F.min(_component_hash(i, "xxhash64")(F.col("g"))).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -1,6 +1,6 @@
 """Vertical interpolation onto 64 fixed pressure levels (SURVEY.md §3.2
 / M3) — the reference's ArgoInterp.proceed_all re-expressed as one
-``groupBy("WMO").applyInPandas`` plan.
+``groupBy("WMO").applyInArrow`` plan.
 
 Reference dataflow (src/argostats/interpolation.py:51-151): per WMO —
 filter FLAG==1 (:108), read raw vars choosing *_ADJUSTED iff every
@@ -64,15 +64,11 @@ def _require_gsw():
 
 
 def _interp_one_wmo(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Per-WMO group kernel: returns one row per *valid* profile.
-
-    Single-parameter on purpose: applyInPandas inspects the arity to
-    decide whether to pass the grouping key — the method variant is a
-    separate single-arg closure (see interpolate_profiles)."""
-    return _interp_wmo_kernel(pdf, "cubic")
-
-
-def _interp_wmo_kernel(pdf: pd.DataFrame, method: str) -> pd.DataFrame:
+    """Driver-side reference for one WMO's rows (cubic method): one row
+    per *valid* profile, a plain per-row pandas loop written apart from
+    the Arrow kernel Spark runs. atlas_oracle.ensure_atlas_oracle_parquet
+    builds the oracle's profiles with it, and the tests compare the
+    Arrow kernel against it row for row."""
     limit_blas_threads()
     pref = pref64().astype("f8")
     # adjusted variables iff ALL profiles of the WMO are delayed-mode
@@ -137,11 +133,7 @@ def _interp_wmo_kernel(pdf: pd.DataFrame, method: str) -> pd.DataFrame:
         ct_i = np.zeros(NLEVELS, dtype="f4")
         sr_i = np.zeros(NLEVELS, dtype="f4")
         idx = np.zeros(NLEVELS, dtype="i1")
-        if method == "gsw":
-            both = _interp_levels_gsw(p_u, ct, sr, pref[in_span])
-        else:
-            # one spline factorization for both variables (F9, hot path)
-            both = cubic_interp_multi(p_u, np.stack([ct, sr], axis=1), pref[in_span])
+        both = cubic_interp_multi(p_u, np.stack([ct, sr], axis=1), pref[in_span])
         ct_i[in_span] = both[:, 0].astype("f4")
         sr_i[in_span] = both[:, 1].astype("f4")
         idx[in_span] = 1
@@ -167,22 +159,22 @@ def _interp_wmo_kernel(pdf: pd.DataFrame, method: str) -> pd.DataFrame:
 
 
 def _interp_one_wmo_arrow(table):
-    """Arrow-native twin of _interp_one_wmo for applyInPandas'
-    applyInArrow sibling (single-argument on purpose, like the pandas
-    kernel)."""
+    """The cubic Spark kernel. Single-argument on purpose: applyInArrow
+    inspects the arity to decide whether to pass the grouping key."""
     return _interp_wmo_arrow_kernel(table, "cubic")
 
 
 def _interp_wmo_arrow_kernel(table, method: str):
-    """Per-WMO kernel on a pyarrow.Table — same math and gates as
-    _interp_wmo_kernel, minus the pandas materialization: level arrays
-    are read as ONE flat values buffer + offsets (zero-copy where the
-    buffer allows) instead of a pandas object column of 150 per-row
-    numpy arrays, the QC product is vectorized over the whole flat
-    buffer, and passthrough columns leave via Table.take. Measured 1.3×
-    end-to-end on the warm 30k-profile microbench (21.5k → 28.0k
-    profiles/s on local[32]) — conversion overhead, not spline math, is
-    the bottleneck at these widths."""
+    """Per-WMO kernel on a pyarrow.Table — same math and gates as the
+    _interp_one_wmo reference, minus the pandas materialization: level
+    arrays are read as ONE flat values buffer + offsets (zero-copy
+    where the buffer allows) instead of a pandas object column of 150
+    per-row numpy arrays, the QC product is vectorized over the whole
+    flat buffer, and passthrough columns leave via Table.take. Measured
+    1.3× end-to-end over an applyInPandas kernel on the warm
+    30k-profile microbench (21.5k → 28.0k profiles/s on local[32]) —
+    conversion overhead, not spline math, is the bottleneck at these
+    widths."""
     import pyarrow as pa
 
     limit_blas_threads()
@@ -295,22 +287,16 @@ def interpolate_profiles(
     summary: DataFrame | None = None,
     num_partitions: int | None = None,
     method: str = "cubic",
-    engine: str = "arrow",
 ) -> DataFrame:
     """raw (+ FLAG from summary or recomputed) → interpolated profiles.
 
-    One exchange (groupBy WMO), Arrow in/out, NumPy inside — the Spark
-    twin of the reference's pool.map(proceed_single_wmo).
+    One exchange (groupBy WMO), Arrow in/out (applyInArrow on flat
+    list buffers), NumPy inside — the Spark twin of the reference's
+    pool.map(proceed_single_wmo).
 
     ``method``: "cubic" (default — the dependency-free spline, F9) or
     "gsw" (the reference's alternate gsw.sa_ct_interp surface,
     interpolation.py:21,79; env-gated on the gsw package).
-
-    ``engine``: "arrow" (default) runs the kernel via applyInArrow on
-    flat list buffers — same math, no pandas object-column
-    materialization (measured 1.3× end-to-end); "pandas" keeps the
-    applyInPandas twin (row-identical, pinned by test, and the fallback
-    where applyInArrow is unavailable).
 
     The explicit repartition on WMO is load-bearing: AQE's partition
     coalescing targets shuffle *bytes* and is blind to Python-kernel CPU
@@ -322,19 +308,14 @@ def interpolate_profiles(
 
     if method not in ("cubic", "gsw"):
         raise ValueError(f"method must be cubic|gsw, got {method!r}")
-    if engine not in ("arrow", "pandas"):
-        raise ValueError(f"engine must be arrow|pandas, got {engine!r}")
     if method == "cubic":
-        kernel, arrow_kernel = _interp_one_wmo, _interp_one_wmo_arrow
+        kernel = _interp_one_wmo_arrow
     else:
         # fast-fail on the driver (executors share the env in local mode,
         # but on a cluster a missing lib should fail before the shuffle)
         _require_gsw()
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _interp_wmo_kernel(pdf, "gsw")
-
-        def arrow_kernel(table):
+        def kernel(table):
             return _interp_wmo_arrow_kernel(table, "gsw")
     flagged = raw.withColumn("FLAG", combine_qc("POSITION_QC", "JULD_QC").cast("byte"))
     # quality gate before the expensive kernel (X2/X9: filter first)
@@ -350,11 +331,10 @@ def interpolate_profiles(
         "PRES_QC", "TEMP_QC", "PSAL_QC",
     )
     n = num_partitions or flagged.sparkSession.sparkContext.defaultParallelism
-    flagged = flagged.repartition(n, "WMO")
-    grouped = flagged.groupBy("WMO")
-    if engine == "arrow" and hasattr(grouped, "applyInArrow"):
-        return grouped.applyInArrow(arrow_kernel, PROFILES_SCHEMA)
-    return grouped.applyInPandas(kernel, PROFILES_SCHEMA)
+    return (
+        flagged.repartition(n, "WMO").groupBy("WMO")
+        .applyInArrow(kernel, PROFILES_SCHEMA)
+    )
 
 
 def write_profiles(profiles: DataFrame, path: str, n_buckets: int = 64) -> None:

@@ -251,7 +251,12 @@ def quality_score_rows(
     # doubles fold in the same order — so scores are bit-identical
     # (oracle parity green). The frame stays a stateless projection
     # (no exchange, no Python; plan-pinned).
+    # temp names absent from the caller's frame (case-insensitively, as
+    # Spark resolves them), so no caller column is replaced and dropped
     bcol, ncol = "__qc_b", "__qc_n"
+    taken = {c.lower() for c in docs.columns}
+    while bcol in taken or ncol in taken:
+        bcol, ncol = bcol + "_", ncol + "_"
     staged = docs.withColumn(bcol, _gram_buckets(text_col, n_buckets))
     staged = staged.withColumn(ncol, F.size(F.col(bcol)))
     n = F.col(ncol)

@@ -41,15 +41,24 @@ def with_bins(
     lon_bin: str = "lon_bin", lat_bin: str = "lat_bin",
 ) -> DataFrame:
     """Attach integer bin-cell coordinates. Longitude bins live on a
-    modular ring of ``360/bin_deg`` bins; latitude bins are clipped."""
+    modular ring of ``360/bin_deg`` bins; latitude bins are clipped to
+    the top bin ``ceil(180/bin_deg) - 1``, so a point at exactly 90°N
+    falls in it rather than in a bin past the pole."""
     nlon = int(round(360.0 / bin_deg))
     return df.withColumn(
         lon_bin,
         F.pmod(F.floor((F.col(lon_col) + F.lit(180.0)) / F.lit(bin_deg)).cast("int"), F.lit(nlon)),
     ).withColumn(
         lat_bin,
-        F.floor((F.col(lat_col) + F.lit(90.0)) / F.lit(bin_deg)).cast("int"),
+        F.least(
+            F.floor((F.col(lat_col) + F.lit(90.0)) / F.lit(bin_deg)).cast("int"),
+            F.lit(_top_lat_bin(bin_deg)),
+        ),
     )
+
+
+def _top_lat_bin(bin_deg: float) -> int:
+    return int(math.ceil(180.0 / bin_deg)) - 1
 
 
 def explode_neighbor_bins(
@@ -59,10 +68,11 @@ def explode_neighbor_bins(
     within ``radius_deg`` of arc — the scalable replacement for the
     reference's fixed 3° tile halo (atlas.py:502).
 
-    Latitude: ±ceil(radius/bin) bins. Longitude: adaptive per row —
-    the longitude span of a ``radius_deg`` arc at latitude φ grows as
-    1/cos(|φ|+radius); near the poles the cap (half the ring) degrades
-    gracefully to a full-ring scan of that latitude band only.
+    Latitude: ±ceil(radius/bin) bins, cut to the bins a point can
+    occupy (0 .. ceil(180/bin)-1, see with_bins). Longitude: adaptive
+    per row — the longitude span of a ``radius_deg`` arc at latitude φ
+    grows as 1/cos(|φ|+radius); near the poles the cap (half the ring)
+    degrades gracefully to a full-ring scan of that latitude band only.
     """
     nlon = int(round(360.0 / bin_deg))
     klat = int(math.ceil(radius_deg / bin_deg))
@@ -82,15 +92,17 @@ def explode_neighbor_bins(
     # and double-weight their points
     g = (
         g.withColumn("_klon", klon)
-        .withColumn("_dlat", F.explode(F.sequence(F.lit(-klat), F.lit(klat))))
+        .withColumn("lat_bin", F.explode(F.sequence(
+            F.col("g_lat_bin") - F.lit(klat), F.col("g_lat_bin") + F.lit(klat)
+        )))
+        .filter(F.col("lat_bin").between(0, _top_lat_bin(bin_deg)))
         .withColumn("_dlon", F.explode(F.sequence(
             -F.col("_klon"), F.least(F.col("_klon"), F.lit(nlon - 1) - F.col("_klon"))
         )))
     )
     return (
         g.withColumn("lon_bin", F.pmod(F.col("g_lon_bin") + F.col("_dlon"), F.lit(nlon)))
-        .withColumn("lat_bin", F.col("g_lat_bin") + F.col("_dlat"))
-        .drop("g_lon_bin", "g_lat_bin", "_dlat", "_dlon", "_klon")
+        .drop("g_lon_bin", "g_lat_bin", "_dlon", "_klon")
     )
 
 

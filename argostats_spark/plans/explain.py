@@ -62,10 +62,3 @@ def count_exchanges(df: DataFrame) -> int:
     return sum(
         1 for line in plan.splitlines() if "Exchange" in line and "Broadcast" not in line
     )
-
-
-def wholestage_codegen_ids(df: DataFrame) -> int:
-    """How many whole-stage-codegen spans the plan has (wider is
-    usually better — Python/UDF boundaries break them)."""
-    plan = physical_plan(df)
-    return plan.count("*(")

@@ -2588,7 +2588,7 @@ from .atlas_oracle import (  # noqa: F401  (re-exported: __spark_entry__, tests)
 @query("argo_atlas_pipeline", _atlas_pipeline_oracle_sql())
 def q_argo_atlas_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference-parity pipeline end-to-end (SURVEY §3.1-3.3): synthetic
-    raw profiles → summary gates → applyInPandas interpolation onto 64
+    raw profiles → summary gates → applyInArrow interpolation onto 64
     levels → materialized parquet intermediate → binned neighborhood
     join → kernel-weighted TS climatology (A1-A3) → one-pass R14 EAPE
     (A4: per cell, mean profile → isopycnal displacement → weighted

@@ -542,36 +542,6 @@ def q_text_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _scan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for a frame (file bytes for a parquet
-    scan) — driver-side metadata, no job. Unknown sizes report as
-    huge so a caller gating a small-only plan falls to the
-    scale-safe branch."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return 1 << 62
-
-
-def _tfidf_window_max_bytes() -> int:
-    """Corpus-size ceiling (scan estimate, bytes) under which
-    q_tfidf_lm_suite keeps the r14 window-sum totals: a ≤128 MB
-    corpus's distinct-token vocab is a few MB at most, so the
-    single-partition WindowExec operand is provably small and the
-    form saves two sequential broadcast materializations (measured,
-    see the query body). Above it, the totals attach via a lazy
-    1-row aggregate + broadcast cross join, which scales to any
-    vocab. Env-tunable (SPARK_GRAFT_TFIDF_WINDOW_MAX_BYTES); 0
-    forces the broadcast form everywhere (how the equality test and
-    the scale plan pin exercise it)."""
-    try:
-        return int(_os.environ.get(
-            "SPARK_GRAFT_TFIDF_WINDOW_MAX_BYTES", str(128 << 20)
-        ))
-    except ValueError:
-        return 128 << 20
-
-
 @query(
     "tfidf_lm_suite",
     r"""
@@ -669,10 +639,10 @@ def q_tfidf_lm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `base` is a per-(source, doc, tok) count aggregate whose exchange
     # every consumer shares via AQE stage reuse: tf re-aggregates it to
     # (source, tok), the LM scores from it per doc. Nothing below is
-    # eager (no checkpoint, no collect — the corpus totals ride window
-    # sums, df rides a window count), so the suite compiles into one
-    # physical plan and the executed plan has exactly one parquet scan
-    # of the corpus and one explode (plan-pinned). The
+    # eager (no checkpoint, no collect — the corpus totals ride a
+    # broadcast 1-row aggregate, df rides a window count), so the suite
+    # compiles into one physical plan and the executed plan has exactly
+    # one parquet scan of the corpus and one explode (plan-pinned). The
     # isnotnull(tok) filter is a row-wise no-op for canonicalization:
     # the LM's inner join on tok pushes exactly this predicate into
     # its copies of the subtree, and a copy without it would diverge
@@ -722,26 +692,16 @@ def q_tfidf_lm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.textstats import nll_deciles
 
     # The LM vocab is the tf aggregate re-summed over sources (round
-    # 12, kept). Its smoothing totals T and V attach one of two ways
-    # (round 15, VERDICT r14 item 3 — identical exact-long totals and
-    # byte-identical smoothing arithmetic either way, equality pinned
-    # by test_tfidf_totals_forms_equal):
-    #
-    # - SMALL corpus (scan estimate ≤ _TFIDF_WINDOW_MAX_BYTES):
-    #   unpartitioned window sums over the vocab table — the r14 form.
-    #   The gate bounds the window's single-partition operand (a
-    #   ≤128 MB corpus's distinct-token vocab is a few MB), and the
-    #   form saves two sequential broadcast materializations on the
-    #   λ-broadcast critical path (interleaved steal-annotated
-    #   fresh-JVM A/B at sf0.1: window 2.317 s vs broadcast 2.446 s
-    #   quietest children — the same +0.1-0.3 s fixed stage latency
-    #   dsir measured for its totals, SCALE.md).
-    # - LARGE corpus: lazy 1-row aggregate + broadcast cross join.
-    #   The r14 window form moved the ENTIRE vocab — ~100M rows on a
-    #   web corpus, per this suite's own scale note — to ONE
-    #   partition (the WindowExec no-partition choke); the aggregate
-    #   rides the vocab exchange via ReusedExchange, so the plan
-    #   keeps 1 corpus scan / 1 explode and nothing is eager.
+    # 12, kept). Its smoothing totals T and V attach via a lazy 1-row
+    # aggregate + broadcast cross join. Unpartitioned window sums
+    # would move the ENTIRE vocab — ~100M rows on a web corpus, per
+    # this suite's own scale note — to ONE partition (the WindowExec
+    # no-partition choke), and measured only ~5% faster at sf0.1
+    # (OPTIMIZATION_r15.md, "tfidf_lm_suite T/V totals"); the aggregate
+    # rides the vocab exchange via ReusedExchange, so the plan keeps 1
+    # corpus scan / 1 explode and nothing is eager. An empty vocab
+    # still yields the totals row (n=0, score=NULL): a global
+    # aggregate always emits one row.
     #
     # The per-doc score is the weighted form Σ c·m_nlp / Σ c over
     # `base`, the same multiset sum as the round-12 avg over exploded
@@ -749,39 +709,16 @@ def q_tfidf_lm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row-for-row at sf0.001/0.01/0.1), the same rounding margin the
     # DuckDB oracle's own avg already tolerates.
     vocab = tf.groupBy("tok").agg(F.sum("tf").alias("c"))
-    _tot_cols = (
+    tot = vocab.agg(F.sum("c").alias("__t"), F.count(F.lit(1)).alias("__v"))
+    voc = vocab.crossJoin(F.broadcast(tot))
+    vocab_row = tot.select(
         F.lit("vocab").alias("part"),
         F.lit("all").alias("k1"),
         F.lit(None).cast("string").alias("k2"),
         F.lit(None).cast("long").alias("rnk"),
+        F.col("__v").alias("n"),
+        F.col("__t").cast("double").alias("score"),
     )
-    if (
-        _scan_size_bytes(_t(spark, sf_dir, "documents"))
-        <= _tfidf_window_max_bytes()
-    ):
-        wall = W.partitionBy()
-        voc = vocab.select(
-            "tok", "c",
-            F.sum("c").over(wall).alias("__t"),
-            F.count(F.lit(1)).over(wall).alias("__v"),
-        )
-        # aggregate (not limit(1)): an empty vocab must still yield
-        # the totals row (n=0, score=NULL), as the r14 form did
-        vocab_row = voc.agg(
-            *_tot_cols,
-            F.count(F.lit(1)).alias("n"),
-            F.sum("c").cast("double").alias("score"),
-        )
-    else:
-        tot = vocab.agg(
-            F.sum("c").alias("__t"), F.count(F.lit(1)).alias("__v")
-        )
-        voc = vocab.crossJoin(F.broadcast(tot))
-        vocab_row = tot.select(
-            *_tot_cols,
-            F.col("__v").alias("n"),
-            F.col("__t").cast("double").alias("score"),
-        )
     m_nlp = -F.log(
         (F.col("c") + F.lit(1.0)) / (F.col("__t") + F.col("__v")).cast("double")
     )
@@ -804,10 +741,9 @@ def q_tfidf_lm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("avg_nll").alias("score"),
     )
 
-    # vocab_row (the totals row) is built per branch above — a lazy
-    # aggregate either way (the round-12 form collected T and V to
-    # the driver and rebuilt them as a literal frame — an action that
-    # would break the one-plan stage reuse)
+    # vocab_row (the totals row) is the lazy aggregate above — not a
+    # driver collect of T and V, an action that would break the
+    # one-plan stage reuse
     return tfidf_rows.unionByName(lm_rows).unionByName(vocab_row)
 
 

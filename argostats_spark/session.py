@@ -16,10 +16,16 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JError
 from pyspark.sql import SparkSession
 
 # Number of local threads; the driver environment exposes SPARK_GRAFT_CPUS.
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+# spread_for_cpu's floor: the fewest input bytes worth one partition of
+# the spread (16 KiB keeps every adopted site, 580-780 KB corpora at
+# sf0.1, at the full 32-way spread)
+SPREAD_MIN_BYTES_PER_PART = 16 << 10
 
 # Parallelism belongs to Spark tasks, not BLAS threads. Each of N Python
 # workers otherwise lets OpenBLAS spawn N threads → N² runnable threads;
@@ -162,8 +168,8 @@ def spread_for_cpu(df):
     Round 15 (VERDICT r14 item 7): the spread is bounded by a
     min-bytes-per-partition floor so a trivially small input never
     fans to the full core count — the target partition count is
-    clamp(input_bytes // SPARK_GRAFT_SPREAD_MIN_BYTES_PER_PART,
-    scan_partitions, defaultParallelism). The default floor (16 KiB)
+    clamp(input_bytes // SPREAD_MIN_BYTES_PER_PART,
+    scan_partitions, defaultParallelism). The floor (16 KiB)
     keeps every adopted site at full spread (the sf0.1 corpora are
     580-780 KB → 32 partitions, the measured-win configurations)
     while a sub-16·p KB input — where even the heaviest per-row map
@@ -178,18 +184,9 @@ def spread_for_cpu(df):
     if cur >= p:
         return df
     try:
-        floor = int(os.environ.get(
-            "SPARK_GRAFT_SPREAD_MIN_BYTES_PER_PART", str(16 << 10)
-        ))
-    except ValueError:
-        floor = 16 << 10
-    if floor > 0:
-        try:
-            size = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            size = None
-        if size is not None and size < (1 << 60):  # a real estimate
-            p = max(cur, min(p, size // floor))
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Py4JError:
+        size = None
+    if size is not None and size < (1 << 60):  # a real estimate
+        p = max(cur, min(p, size // SPREAD_MIN_BYTES_PER_PART))
     return df.repartition(p) if cur < p else df

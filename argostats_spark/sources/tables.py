@@ -56,25 +56,3 @@ def write_bucketed_table(
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.format("parquet").saveAsTable(table_name)
-
-
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    sort_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Partitioned, optionally sorted Parquet sink.
-
-    ``partition_by`` + ``sort_by`` reproduce the reference's data-locality
-    layout (records contiguous per WMO, README.md:146-158) as Parquet
-    row-group locality: a later read filtered on the partition column
-    prunes files, and min/max stats skip row groups.
-    """
-    if sort_by:
-        df = df.sortWithinPartitions(*sort_by)
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""Micro-benchmark: applyInPandas weighted mean vs level-exploded
-expression aggregation for the atlas core (SURVEY.md §7.3 'benchmark
+"""Micro-benchmark: Arrow group-kernel weighted mean (clim_ts) vs
+level-exploded expression aggregation (clim_ts_exploded) for the atlas core (SURVEY.md §7.3 'benchmark
 both at sf0.1'). Synthetic profile cloud sized so the pair set is
 O(500k) — comparable to a regional atlas at 1/4°.
 
@@ -49,9 +49,8 @@ def main():
 
     Default (10k profiles, 2°): the regional 400-cell shape behind the
     ATLAS_BENCH note. ``bench_atlas.py 50000 0.25`` runs the ≥10⁵-cell
-    shape (128k cells over 100°×80°) — VERDICT r4 item 6: the
-    arrow-vs-pandas group-shape tradeoff re-measured where a 1/4°
-    global grid actually lives."""
+    shape (128k cells over 100°×80°), where a 1/4° global grid
+    actually lives."""
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000
     reso = float(sys.argv[2]) if len(sys.argv) > 2 else 2.0
     spark = get_spark("bench_atlas")
@@ -65,8 +64,7 @@ def main():
     print(f"cells: {n_cells}  pairs: {n_pairs}")
 
     variants = [
-        ("applyInPandas", lambda g, p, pr: clim_ts(g, p, reso, pairs=pr, engine="pandas")),
-        ("applyInArrow", lambda g, p, pr: clim_ts(g, p, reso, pairs=pr, engine="arrow")),
+        ("applyInArrow", lambda g, p, pr: clim_ts(g, p, reso, pairs=pr)),
         ("exploded", lambda g, p, pr: clim_ts_exploded(g, p, reso, pairs=pr)),
     ]
     for name, fn in variants:

@@ -159,15 +159,19 @@ def test_monotone_gate_drops_bad_profiles_no_downward_extrapolation():
     - mid-profile swap              → KEPT, silently value-sorted (the
       reference's arithmetic cannot see it);
     and interpolation targets never extend below the deepest
-    measurement (deltamax = 0)."""
-    from argostats_spark.operators.interpolation import _interp_one_wmo
+    measurement (deltamax = 0). Checked on the driver reference and on
+    the Arrow kernel Spark runs."""
+    from argostats_spark.operators.interpolation import (
+        _interp_one_wmo,
+        _interp_one_wmo_arrow,
+    )
     from argostats_spark.schemas import pref64
 
     n = 20
     pres = np.arange(0.0, 40.0 * n, 40.0)[:n]
     base = {
-        "WMO": 1, "DAC": 0, "IPROF": 0, "JULD": 0.0, "LATITUDE": 0.0,
-        "LONGITUDE": 0.0, "DATA_MODE": 0, "FLAG": 1,
+        "WMO": 1, "DAC": 0, "IPROF": 0, "JULD": pd.Timestamp("2020-01-01"),
+        "LATITUDE": 0.0, "LONGITUDE": 0.0, "DATA_MODE": 0, "FLAG": 1,
         "TEMP": (25.0 - pres / 100.0).astype("f4"),
         "PSAL": np.full(n, 35.0, dtype="f4"),
         "PRES_QC": np.ones(n, dtype="i1"), "TEMP_QC": np.ones(n, dtype="i1"),
@@ -184,24 +188,27 @@ def test_monotone_gate_drops_bad_profiles_no_downward_extrapolation():
     swap["TEMP"][5], swap["TEMP"][6] = base["TEMP"][6], base["TEMP"][5]  # whole record
     ok = dict(base, IPROF=0, PRES=pres.copy())
     pdf = pd.DataFrame([ok, dup, desc, trail, swap])
-    out = _interp_one_wmo(pdf)
-    assert out.IPROF.tolist() == [0, 3, 4]  # dup + descending dropped
     pref = pref64()
-    for _, r in out.iterrows():
-        # deltamax = 0: no target below the deepest measured pressure
-        idx = np.array(r.IDX)
-        assert pref[idx == 1].max() <= pres.max()
-    # the trailing-dup profile interpolates on the clean prefix: its
-    # deepest valid target is bounded by the prefix's max pressure
-    trail_row = out[out.IPROF == 3].iloc[0]
-    idx = np.array(trail_row.IDX)
-    assert pref[idx == 1].max() <= pres[n - 2]
-    # swap profile == clean profile (values get sorted): same CT grid
-    np.testing.assert_allclose(
-        np.array(out[out.IPROF == 4].CT.iloc[0]),
-        np.array(out[out.IPROF == 0].CT.iloc[0]),
-        rtol=1e-6,
-    )
+    for out in (
+        _interp_one_wmo(pdf),
+        _interp_one_wmo_arrow(_arrow_table_from_pdf(pdf)).to_pandas(),
+    ):
+        assert out.IPROF.tolist() == [0, 3, 4]  # dup + descending dropped
+        for _, r in out.iterrows():
+            # deltamax = 0: no target below the deepest measured pressure
+            idx = np.array(r.IDX)
+            assert pref[idx == 1].max() <= pres.max()
+        # the trailing-dup profile interpolates on the clean prefix: its
+        # deepest valid target is bounded by the prefix's max pressure
+        trail_row = out[out.IPROF == 3].iloc[0]
+        idx = np.array(trail_row.IDX)
+        assert pref[idx == 1].max() <= pres[n - 2]
+        # swap profile == clean profile (values get sorted): same CT grid
+        np.testing.assert_allclose(
+            np.array(out[out.IPROF == 4].CT.iloc[0]),
+            np.array(out[out.IPROF == 0].CT.iloc[0]),
+            rtol=1e-6,
+        )
 
 
 def test_write_profiles_roundtrip(spark, profiles, tmp_path):
@@ -332,9 +339,11 @@ def test_eape_t25_algo_switch(spark):
         clim_eape(grid, prof, reso_deg=1.0, algo="bogus").toPandas()
 
 
-def test_clim_ts_exploded_matches_pandas_kernel(spark, profiles):
-    """The two weighted-mean implementations (applyInPandas kernel vs
-    level-exploded expression aggregation) must agree exactly."""
+def test_clim_ts_exploded_matches_arrow_kernel(spark, profiles):
+    """The two weighted-mean implementations (clim_ts's Arrow group
+    kernel vs clim_ts_exploded's level-exploded expression aggregation)
+    must agree: same cells and pair counts, CT to 1e-5 and W to 1e-4
+    (the two sum in different orders)."""
     from argostats_spark.operators.atlas import clim_ts_exploded
 
     pdf = profiles.select("LONGITUDE", "LATITUDE").toPandas()
@@ -595,24 +604,23 @@ def test_interpolation_gsw_method_env_gated(spark, raw):
         np.testing.assert_allclose(np.asarray(a), np.asarray(b), atol=0.5)
 
 
-def test_interpolation_arrow_engine_equals_pandas(spark, raw):
-    """The applyInArrow kernel (flat list buffers, Table.take
-    passthrough) must be row-identical to the applyInPandas twin —
-    including the adjusted-variable branch, validity gates, NVALUES and
-    every CT/SR/IDX element."""
-    import pandas as pd
+def test_interpolation_equals_driver_reference(spark, raw, profiles):
+    """Spark's interpolate_profiles (the applyInArrow kernel: flat list
+    buffers, Table.take passthrough) must be row-identical to the
+    driver-side reference _interp_one_wmo applied per WMO group after
+    the same FLAG gate — including the adjusted-variable branch,
+    validity gates, NVALUES and every CT/SR/IDX element."""
+    from argostats_spark.operators.interpolation import _interp_one_wmo
 
-    from argostats_spark.operators.interpolation import interpolate_profiles
-
-    a = interpolate_profiles(raw, engine="arrow").orderBy("WMO", "IPROF").toPandas()
-    p = interpolate_profiles(raw, engine="pandas").orderBy("WMO", "IPROF").toPandas()
-    assert len(a) > 0
-    pd.testing.assert_frame_equal(a, p)
-
-    import pytest
-
-    with pytest.raises(ValueError, match="arrow|pandas"):
-        interpolate_profiles(raw, engine="rdd")
+    r = raw.toPandas()
+    r = r[r.POSITION_QC * r.JULD_QC == 1].assign(FLAG=1)
+    ref = pd.concat(
+        [_interp_one_wmo(g) for _, g in r.groupby("WMO")], ignore_index=True
+    )
+    want = spark.createDataFrame(ref, PROFILES_SCHEMA).orderBy("WMO", "IPROF").toPandas()
+    got = profiles.orderBy("WMO", "IPROF").toPandas()
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(got, want)
 
 
 def _delayed_mode_wmo_pdf(n_prof=3, n_lev=20):
@@ -750,35 +758,6 @@ def test_atlas_pipeline_refuses_nonlocal_master_without_shared_tmp(monkeypatch):
     monkeypatch.delenv("ARGOSTATS_ATLAS_TMP", raising=False)
     with pytest.raises(RuntimeError, match="ARGOSTATS_ATLAS_TMP"):
         Q.QUERIES["argo_atlas_pipeline"](_FakeSpark(), "/root/testdata/sf0.001")
-
-
-def test_clim_ts_arrow_engine_equals_pandas(spark, profiles):
-    """The applyInArrow cell kernel (the round-5 default — re-measured
-    2-5× faster at every group shape, SCALE.md) must match the pandas
-    twin exactly (the fallback where applyInArrow is unavailable);
-    correctness pinned here so the transport choice stays a pure
-    performance decision."""
-    import pandas as pd
-
-    from argostats_spark.operators.atlas import clim_ts, make_grid
-
-    b = profiles.filter(
-        (F.col("FLAG") == 1) & (F.col("DATA_MODE") == 1)
-    ).agg(
-        F.floor(F.min("LONGITUDE")).alias("w"), F.ceil(F.max("LONGITUDE")).alias("e"),
-        F.floor(F.min("LATITUDE")).alias("s"), F.ceil(F.max("LATITUDE")).alias("n"),
-    ).first()
-    grid = make_grid(
-        spark, (float(b.w), float(b.e) + 2, float(b.s), float(b.n) + 2), reso_deg=5.0
-    )
-    a = clim_ts(grid, profiles, 5.0, 2.0, engine="arrow").orderBy(
-        "glon", "glat"
-    ).toPandas()
-    p = clim_ts(grid, profiles, 5.0, 2.0, engine="pandas").orderBy(
-        "glon", "glat"
-    ).toPandas()
-    assert len(a) > 0
-    pd.testing.assert_frame_equal(a, p)
 
 
 def _two_pass_eape(pairs, ts, theta: float, algo: str):

@@ -246,6 +246,8 @@ def test_registry_plans_free_of_antipatterns(spark, sf_dir):
         "ocean_mask_gate",       # broadcast scalar mask stats gate
         "argo_atlas_pipeline",   # contains the kernel grid join above
         "quality_filter",        # broadcast 1-row percentile threshold
+        "tfidf_lm_suite",        # broadcast 1-row LM smoothing totals
+                                 # (T, V) onto the vocab table
         "histograms",            # skew limb: broadcast 1-row total onto
                                  # the 20-row top-k (key_skew_report; r8)
         "stats_suite",           # lm_ap limb: broadcast 1-row approx-
@@ -374,8 +376,11 @@ def test_tfidf_lm_suite_tokenizes_corpus_once(spark, sf):
     the executed (final adaptive) plan must contain exactly one
     corpus parquet scan and one explode, with the shared exchange
     reused (the n_src scalar is a separate pruned scan outside this
-    plan). The round-12 form tokenized the corpus twice (eager tf
-    checkpoint + LM scoring pass). From-parquet contract: clear any
+    plan). The LM's T/V smoothing totals are a 1-row aggregate over
+    the vocab table, broadcast back onto it; that aggregate must ride
+    the vocab exchange too, not re-tokenize. The round-12 form
+    tokenized the corpus twice (eager tf checkpoint + LM scoring
+    pass). From-parquet contract: clear any
     cached reads of the corpus left by earlier modules (see the dsir
     pin above)."""
     spark.catalog.clearCache()
@@ -387,30 +392,6 @@ def test_tfidf_lm_suite_tokenizes_corpus_once(spark, sf):
     assert final.count("Scan parquet") == 1, final[:2000]
     assert final.count("Generate") == 1, final[:2000]
     assert "ReusedExchange" in final, final[:2000]
-
-
-def test_tfidf_totals_broadcast_form_plan_and_equality(spark, sf, monkeypatch):
-    """Round 15 (VERDICT r14 item 3): above the corpus-size gate the
-    suite's T/V smoothing totals attach via a lazy 1-row aggregate +
-    broadcast cross join instead of unpartitioned window sums over the
-    vocabulary-sized table (a single-partition WindowExec at web-corpus
-    vocab sizes). Forcing the broadcast form (gate=0) must (a) keep the
-    one-tokenize executed-plan pin — 1 corpus scan, 1 explode,
-    ReusedExchange — and (b) produce rows identical to the small-corpus
-    window form."""
-    spark.catalog.clearCache()
-    small = QUERIES["tfidf_lm_suite"](spark, sf)
-    small_rows = sorted(map(tuple, small.collect()))
-    monkeypatch.setenv("SPARK_GRAFT_TFIDF_WINDOW_MAX_BYTES", "0")
-    big = QUERIES["tfidf_lm_suite"](spark, sf)
-    big.collect()
-    plan = big._jdf.queryExecution().executedPlan().toString()
-    assert "isFinalPlan=true" in plan, plan[:300]
-    final = plan.split("Initial Plan")[0]
-    assert final.count("Scan parquet") == 1, final[:2000]
-    assert final.count("Generate") == 1, final[:2000]
-    assert "ReusedExchange" in final, final[:2000]
-    assert sorted(map(tuple, big.collect())) == small_rows
 
 
 def test_bpe_encode_broadcasts_vocab(spark, sf):
@@ -508,11 +489,8 @@ def test_global_window_sites_are_inventoried():
     unbounded: guard it like equi_depth_histogram's max_global_rows).
 
     Current inventory (all windows over bounded frames unless noted):
-    - queries_documents.py (3): dsir bucket_rows (limit 10 → rank),
-      bpe sw_rows (limit 50 → rank), and tfidf_lm_suite's LM smoothing
-      totals T/V as window sums over the VOCABULARY-sized table
-      (round-14 continuation — replaces the totals collect so the
-      one-tokenize plan stays lazy);
+    - queries_documents.py (2): dsir bucket_rows (limit 10 → rank) and
+      bpe sw_rows (limit 50 → rank);
     - queries.py (1): stats_suite lm_ap pop sum (<= 10 decile rows);
     - operators/dsir.py (2): top-k rank over a limit(k) frame, and
       the λ fit's corpus-totals window sums over the ≤B-row
@@ -547,5 +525,25 @@ def test_global_window_sites_are_inventoried():
         "operators/profile.py": 3,
         "operators/textstats.py": 1,
         "queries.py": 1,
-        "queries_documents.py": 3,
+        "queries_documents.py": 2,
     }, f"global-window inventory drifted: {found}"
+
+
+def test_env_knobs_are_inventoried():
+    """Every SPARK_GRAFT_* environment variable the package reads is an
+    option every test and benchmark configuration must cover, so the
+    set is pinned: a new knob fails here until it is added on purpose.
+
+    Current inventory: SPARK_GRAFT_CPUS (local thread count),
+    SPARK_GRAFT_DRIVER_MEM (driver heap) and SPARK_GRAFT_SF_DIR (the
+    default testdata directory) — deployment settings, not behaviour
+    switches."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "argostats_spark"
+    pat = re.compile(r"SPARK_GRAFT_[A-Z_]+")
+    found = {m for p in pkg.rglob("*.py") for m in pat.findall(p.read_text())}
+    assert found == {
+        "SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "SPARK_GRAFT_SF_DIR",
+    }, f"env-knob inventory drifted: {sorted(found)}"

@@ -161,6 +161,21 @@ def test_scores_separate_and_row_semantics(spark):
     assert got == pytest.approx(want, abs=1e-9)
 
 
+def test_score_rows_keeps_caller_columns_named_like_its_temps(spark):
+    """quality_score_rows stages its gram buckets in temp columns; a
+    caller column with one of those names must come out unchanged."""
+    docs = spark.createDataFrame(
+        [(0, POS[0], "keep", 7)], "doc_id long, text string, __qc_b string, __QC_N int"
+    )
+    out = quality_score_rows(docs, [0.1] * B, -0.2)
+    assert out.columns == ["doc_id", "text", "__qc_b", "__QC_N", "q_score"]
+    r = out.collect()[0]
+    assert (r["__qc_b"], r["__QC_N"]) == ("keep", 7)
+    assert r["q_score"] == quality_score_rows(
+        docs.select("doc_id", "text"), [0.1] * B, -0.2
+    ).collect()[0]["q_score"]
+
+
 def test_score_rows_streaming_equals_batch(spark, tmp_path):
     pos = spark.createDataFrame([(t,) for t in POS], "text string")
     neg = spark.createDataFrame([(t,) for t in NEG], "text string")

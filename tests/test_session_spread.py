@@ -6,9 +6,12 @@ spread) keep their round-12/14 behavior."""
 
 from __future__ import annotations
 
+import os
+from urllib.parse import urlparse
+
 import pytest
 
-from argostats_spark.session import spread_for_cpu
+from argostats_spark.session import SPREAD_MIN_BYTES_PER_PART, spread_for_cpu
 
 
 @pytest.fixture()
@@ -20,8 +23,8 @@ def docs_small(spark):
 
 @pytest.fixture()
 def docs_big(spark):
-    # sf0.1 documents: ~580 KB — 16 KiB/partition allows 36 > cores,
-    # so the spread goes to the full defaultParallelism (the measured
+    # sf0.1 documents: ~580 KB — 16 KiB/partition allows 36 partitions,
+    # the full spread on hosts up to 36 cores (the measured
     # cosine_topk/dsir/text_suite win configuration)
     return spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
 
@@ -43,17 +46,13 @@ def test_tiny_input_does_not_fan_out(spark, tmp_path):
 
 
 def test_big_input_gets_full_spread(spark, docs_big):
+    # the expected count from this host's cores and the file's bytes:
+    # min(cores, 36) on the sf0.1 corpus, never below the scan's split
     p = spark.sparkContext.defaultParallelism
-    assert docs_big.rdd.getNumPartitions() < p
-    out = spread_for_cpu(docs_big)
-    assert out.rdd.getNumPartitions() == p
-
-
-def test_floor_zero_disables_the_gate(spark, docs_small, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_MIN_BYTES_PER_PART", "0")
-    p = spark.sparkContext.defaultParallelism
-    out = spread_for_cpu(docs_small)
-    assert out.rdd.getNumPartitions() == p
+    scan_parts = docs_big.rdd.getNumPartitions()
+    file_bytes = sum(os.path.getsize(urlparse(f).path) for f in docs_big.inputFiles())
+    want = max(scan_parts, min(p, file_bytes // SPREAD_MIN_BYTES_PER_PART))
+    assert spread_for_cpu(docs_big).rdd.getNumPartitions() == want
 
 
 def test_already_spread_input_is_returned_unchanged(spark, docs_big):

@@ -43,27 +43,35 @@ def _brute_force(spark, grid_pdf, pts_pdf, radius_deg):
         ((60, 85), (55, 88), 8.0),     # meridian convergence
         ((-80, -60), (-85, -55), 12.0),
         ((84, 86), (80, 90), 10.0),    # lon reach wider than the ring
+        ((-90, 90), (-90, 90), 10.0),  # cells and points at exactly ±90°
     ],
 )
 def test_binned_equals_brute_force(spark, case):
     (g_lo, g_hi), (p_lo, p_hi), radius = case
     rng = np.random.default_rng(hash(case) % 2**32)
+    # each side also gets one row at each end of its latitude range, so
+    # a range that reaches a pole has members at exactly the pole
     grid_pdf = pd.DataFrame({
-        "glon": rng.uniform(-180, 180, 40),
-        "glat": rng.uniform(g_lo, g_hi, 40),
-        "cell_id": np.arange(40),
+        "glon": np.r_[rng.uniform(-180, 180, 40), 0.5, -90.5],
+        "glat": np.r_[rng.uniform(g_lo, g_hi, 40), g_lo, g_hi],
+        "cell_id": np.arange(42),
     })
     pts_pdf = pd.DataFrame({
-        "lon": rng.uniform(-180, 180, 300),
-        "lat": rng.uniform(p_lo, p_hi, 300),
-        "pt_id": np.arange(300),
+        "lon": np.r_[rng.uniform(-180, 180, 300), 45.0, -135.0],
+        "lat": np.r_[rng.uniform(p_lo, p_hi, 300), p_lo, p_hi],
+        "pt_id": np.arange(302),
     })
 
+    grid = spark.createDataFrame(grid_pdf)
+    # the cover holds only latitude bins a point can occupy
+    bin_deg = max(radius, 1.0)
+    lo, hi = explode_neighbor_bins(grid, "glon", "glat", radius, bin_deg).agg(
+        F.min("lat_bin"), F.max("lat_bin")
+    ).first()
+    assert 0 <= lo and hi <= math.ceil(180 / bin_deg) - 1, (lo, hi)
+
     brute = _brute_force(spark, grid_pdf, pts_pdf, radius)
-    binned = neighborhood_join(
-        spark.createDataFrame(grid_pdf), spark.createDataFrame(pts_pdf),
-        radius_deg=radius,
-    )
+    binned = neighborhood_join(grid, spark.createDataFrame(pts_pdf), radius_deg=radius)
     # multisets: a pair the join emits twice double-weights its point
     want = Counter((r.cell_id, r.pt_id) for r in brute.select("cell_id", "pt_id").collect())
     got = Counter((r.cell_id, r.pt_id) for r in binned.select("cell_id", "pt_id").collect())
@@ -76,12 +84,12 @@ def test_binned_equals_brute_force(spark, case):
 def test_cross_pole_pair_emitted_once(spark):
     """Near a pole the longitude reach of the radius spans more than the
     whole bin ring (2·klon+1 > nlon): the cover must still hold each
-    (cell, bin) once — 3 lat bins × 36 lon bins — and the pair across
-    the pole must come out once."""
+    (cell, bin) once — 2 lat bins (the third would lie past the pole)
+    × 36 lon bins — and the pair across the pole must come out once."""
     grid = spark.createDataFrame(pd.DataFrame({"glon": [0.5], "glat": [85.0]}))
     pts = spark.createDataFrame(pd.DataFrame({"lon": [-179.5], "lat": [87.0]}))
     cover = explode_neighbor_bins(grid, "glon", "glat", 10.0, 10.0)
-    assert cover.count() == cover.distinct().count() == 108
+    assert cover.count() == cover.distinct().count() == 72
     assert neighborhood_join(grid, pts, radius_deg=10.0).count() == 1
 
 
