@@ -31,6 +31,7 @@ from pyspark.sql.types import LongType, TimestampNTZType
 
 from .functions.geo import haversine_arg, haversine_km
 from .operators.spatial import kernel_weighted_mean
+from .sources.tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -66,10 +67,14 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``sf_dir/<name>.parquet`` via ``load_table`` (schema inferred once)."""
     ensure_workers_can_import(spark)
+    # set for every table, not only events: the conf is in load_table's
+    # cache key, and only TIMESTAMP(NANOS) columns read differently
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if name == "events":
         return _events(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return load_table(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -86,7 +91,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # not shift year()/hour() vs the oracle's TZ-naive reading of the
     # same instants
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    df = load_table(spark, os.path.join(sf_dir, "events.parquet"))
     ts_type = df.schema["ts"].dataType
     if isinstance(ts_type, LongType):
         # exact integer division: long/long with `/` promotes to double,
@@ -2626,7 +2631,7 @@ def q_argo_atlas_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_workers_can_import(spark)
     raw = make_raw(spark, n_wmos=6, profiles_per_wmo=8, seed=42)
     interpolate_profiles(raw).write.mode("overwrite").parquet(_AO._ATLAS_ORACLE_PARQUET)
-    profiles = spark.read.parquet(_AO._ATLAS_ORACLE_PARQUET)
+    profiles = load_table(spark, _AO._ATLAS_ORACLE_PARQUET)
     # grid over the FULL bounding box of eligible profiles: WMOs scatter
     # globally, so a fixed-size box at (min lon, min lat) — one corner
     # from one WMO, the other from another — can contain zero profiles.

@@ -1,3 +1,3 @@
-from .tables import TESTDATA_TABLES, load_table, load_tables, register_views
+from .tables import TESTDATA_TABLES, load_table
 
-__all__ = ["TESTDATA_TABLES", "load_table", "load_tables", "register_views"]
+__all__ = ["TESTDATA_TABLES", "load_table"]

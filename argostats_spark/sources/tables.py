@@ -7,6 +7,15 @@ self-describing binary file (src/argostats/binaryfiles.py). Both become
 Parquet footer, ranged per-WMO reads (interpolation.py:153-162) become
 predicate pushdown + row-group skipping, and the preallocated-offset
 chunk writes (binaryfiles.py:54-85) become task-isolated part files.
+
+``load_table`` is the query registry's one Parquet reader. A read with
+no schema runs a Spark job to read a footer, so ``load_table`` infers a
+table's schema once per process, keyed by (realpath, the session's
+``_INFERENCE_CONFS`` values), and gives it to every later read, which
+runs no job. The entry keeps the files' (name, size, mtime_ns); when
+they differ, the read infers again and replaces it, so a rewritten table
+never reads with a stale schema. A path the driver cannot see (a URI) is
+read plainly and not cached.
 """
 
 from __future__ import annotations
@@ -14,6 +23,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TESTDATA_TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -23,18 +33,41 @@ TESTDATA_TABLES = [
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+# session confs that change the schema Parquet inference yields
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+
+# (realpath, conf values) -> (file signature, inferred schema)
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
+def _file_signature(path: str) -> tuple:
+    files = [path] if os.path.isfile(path) else [
+        os.path.join(root, f) for root, _, fs in os.walk(path) for f in fs]
+    return tuple(sorted(
+        (os.path.relpath(f, path), (st := os.stat(f)).st_size, st.st_mtime_ns) for f in files))
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
+def load_table(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inferred once per path
+    and inference confs, re-inferred when the files change."""
+    if not os.path.exists(path):
+        return spark.read.parquet(path)
+    real = os.path.realpath(path)
+    key = (real, tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
+    sig = _file_signature(real)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == sig:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (sig, df.schema)
+    return df
 
 
 def write_bucketed_table(

@@ -17,7 +17,7 @@ from argostats_spark.session import SPREAD_MIN_BYTES_PER_PART, spread_for_cpu
 @pytest.fixture()
 def docs_small(spark):
     # sf0.001 documents: ~64 KB parquet — the 16 KiB/partition floor
-    # clamps the spread to ~4 partitions instead of the core count
+    # clamps the spread to 3 partitions instead of the core count
     return spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
 
@@ -30,11 +30,18 @@ def docs_big(spark):
 
 
 def test_small_input_spread_is_clamped(spark, docs_small):
+    # the expected count from this host's cores and the file's bytes:
+    # the ~64 KB corpus allows 3 partitions at the 16 KiB floor, so the
+    # spread stays below the core count only on hosts with more than 3
     p = spark.sparkContext.defaultParallelism
     scan_parts = docs_small.rdd.getNumPartitions()
-    assert scan_parts < p  # single-split fixture, else the test is vacuous
+    file_bytes = sum(os.path.getsize(urlparse(f).path) for f in docs_small.inputFiles())
+    allowed = file_bytes // SPREAD_MIN_BYTES_PER_PART
+    want = max(scan_parts, min(p, allowed))
     out_parts = spread_for_cpu(docs_small).rdd.getNumPartitions()
-    assert scan_parts <= out_parts < p
+    assert out_parts == want
+    if allowed < p:
+        assert out_parts < p
 
 
 def test_tiny_input_does_not_fan_out(spark, tmp_path):
