@@ -30,9 +30,6 @@ TESTDATA_TABLES = [
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 # session confs that change the schema Parquet inference yields
 _INFERENCE_CONFS = (
     "spark.sql.legacy.parquet.nanosAsLong",

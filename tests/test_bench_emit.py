@@ -1,9 +1,10 @@
-"""bench.py artifact-emit guards (no Spark session needed).
+"""bench.py line-emit guard (no Spark session needed).
 
-The driver records only the last ~2000 chars of bench stdout; BENCH_r10
-was committed ``parsed: null`` when the line outgrew that window
+bench.py prints one JSON line. BENCH_r10 was committed ``parsed: null``
+when that line outgrew the ~2000-char stdout tail its reader kept
 (COVERAGE delta r11 #2). `_emit_check` is the loud-failure gate in the
-emit path — these tests pin its contract without starting Spark.
+emit path — these tests pin its contract without starting Spark, and
+check that every committed BENCH_r*.json line would still pass it.
 """
 
 from __future__ import annotations
@@ -72,122 +73,6 @@ def test_emit_check_rejects_embedded_newline(bench):
         bench._emit_check(line, 1900)
 
 
-def test_classify_flags_replays_r12_as_host_contended(bench):
-    """VERDICT r12 item 2, the motivating exhibit: the six rows
-    BENCH_r12 flagged as regressions (all untouched code, cleared by
-    the same-tree quiet-box preview and by independent load<1
-    remeasures) ran their isolated remeasures at recorded 1-min loads
-    1.46-2.79 — above the adjudication ceiling. Replaying the
-    committed detail artifact through classify_flags must class all
-    six as unadjudicated_host and confirm none."""
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "BENCH_detail_r12_sf0.1.json")) as f:
-        doc = json.load(f)
-    assert len(doc["regressions"]) == 6  # the exhibit
-    confirmed, unadj = bench.classify_flags(
-        doc["regressions"], doc["remeasured"], 1.0
-    )
-    assert confirmed == {}
-    assert set(unadj) == set(doc["regressions"])
-    for name, entry in unadj.items():
-        assert "load" in entry["why"], (name, entry)
-        # the original flag fields ride along for the diff reader
-        assert entry["ratio"] == doc["regressions"][name]["ratio"]
-
-
-def test_classify_flags_confirms_quiet_box_flags(bench):
-    """A flag whose isolated remeasure ran quiet IS a regression; the
-    skip/error paths are named open questions."""
-    flagged = {
-        "real": {"prev_sec": 1.0, "now_sec": 2.0, "ratio": 2.0},
-        "busy": {"prev_sec": 1.0, "now_sec": 2.0, "ratio": 2.0},
-        "walled": {"prev_sec": 1.0, "now_sec": 2.0, "ratio": 2.0},
-        "ungated": {"prev_sec": 1.0, "now_sec": 2.0, "ratio": 2.0},
-        "errored": {"prev_sec": 1.0, "now_sec": 2.0, "ratio": 2.0},
-        "orphan": {"prev_sec": 1.0, "now_sec": 2.0, "ratio": 2.0},
-    }
-    remeasured = {
-        "real": {"insession_sec": 2.2, "isolated_sec": 2.0,
-                 "load_before_1m": 0.4, "load_after_1m": 9.0},
-        "busy": {"insession_sec": 2.2, "isolated_sec": 2.0,
-                 "load_before_1m": 1.46},
-        "walled": {"wall_skipped": True},
-        "ungated": {"insession_sec": 2.2, "isolated_sec": 2.0,
-                    "load_before_1m": 0.4, "gate_skipped": True},
-        "errored": {"error": "Boom: child died"},
-    }
-    confirmed, unadj = bench.classify_flags(flagged, remeasured, 1.0)
-    # load_after is the child's OWN work and must not disqualify
-    assert set(confirmed) == {"real"}
-    assert set(unadj) == {"busy", "walled", "ungated", "errored", "orphan"}
-    assert "wall budget" in unadj["walled"]["why"]
-    assert "ungated" in unadj["ungated"]["why"]
-    assert "errored" in unadj["errored"]["why"]
-    assert "never isolated" in unadj["orphan"]["why"]
-    # empty inputs stay empty (the always-present regressions key)
-    assert bench.classify_flags({}, {}, 1.0) == ({}, {})
-
-
-def test_classify_flags_partition_property(bench):
-    """Hypothesis pin (pure function, no Spark): classify_flags always
-    PARTITIONS the flagged set — confirmed ∪ unadjudicated == flagged,
-    disjoint — and confirms a flag ONLY when its remeasure entry is
-    present, error-free, un-skipped, and quiet (load_before_1m <= the
-    ceiling). Every unadjudicated entry carries a non-empty reason and
-    the original flag fields."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    entry = st.fixed_dictionaries(
-        {},
-        optional={
-            "load_before_1m": st.floats(0.0, 20.0, allow_nan=False),
-            "isolated_sec": st.floats(0.01, 30.0, allow_nan=False),
-            "wall_skipped": st.just(True),
-            "gate_skipped": st.just(True),
-            "error": st.text(min_size=1, max_size=20),
-        },
-    )
-    names = st.lists(
-        st.text(
-            alphabet="abcdefgh_", min_size=1, max_size=8
-        ),
-        unique=True, max_size=6,
-    )
-
-    @settings(max_examples=200, deadline=None)
-    @given(names=names, entries=st.lists(entry, max_size=6),
-           extra=st.booleans(),
-           ceiling=st.floats(0.1, 5.0, allow_nan=False))
-    def check(names, entries, extra, ceiling):
-        flagged = {
-            n: {"prev_sec": 1.0, "now_sec": 2.0, "ratio": 2.0}
-            for n in names
-        }
-        remeasured = dict(zip(names, entries))
-        if extra:  # remeasured rows that were never flagged are ignored
-            remeasured["__unflagged__"] = {"load_before_1m": 0.1}
-        confirmed, unadj = bench.classify_flags(
-            flagged, remeasured, ceiling
-        )
-        assert set(confirmed) | set(unadj) == set(flagged)
-        assert not set(confirmed) & set(unadj)
-        for n, e in confirmed.items():
-            r = remeasured[n]
-            assert r and "error" not in r
-            assert not r.get("wall_skipped") and not r.get("gate_skipped")
-            assert r.get("load_before_1m") is not None
-            assert r["load_before_1m"] <= ceiling
-            assert e == flagged[n]  # flag fields pass through untouched
-        for n, e in unadj.items():
-            assert e["why"]
-            assert e["ratio"] == flagged[n]["ratio"]
-
-    check()
-
-
 def test_committed_artifact_lines_would_pass(bench):
     """Every committed BENCH_r*.json whose line the driver parsed must
     satisfy the gate retroactively (regression anchor: the gate must
@@ -206,28 +91,3 @@ def test_committed_artifact_lines_would_pass(bench):
         bench._emit_check(json.dumps(payload), 4000)
         checked += 1
     assert checked >= 1
-
-
-def test_classify_flags_steal_burst_is_unadjudicated(bench):
-    """Round-14 close: a remeasure that ran through a hypervisor
-    CPU-steal burst (invisible to loadavg) must NOT confirm a
-    regression — and artifacts that predate the steal field replay
-    exactly as before (missing field == no steal evidence == the
-    load rule decides alone)."""
-    flagged = {
-        "stolen": {"prev_sec": 1.0, "now_sec": 3.0, "ratio": 3.0},
-        "quiet": {"prev_sec": 1.0, "now_sec": 3.0, "ratio": 3.0},
-        "legacy": {"prev_sec": 1.0, "now_sec": 3.0, "ratio": 3.0},
-    }
-    remeasured = {
-        # quiet load but a 16k-jiffy steal burst: box, not plan
-        "stolen": {"load_before_1m": 0.2, "steal_jiffies": 16705},
-        # quiet load, quiet steal: confirmed
-        "quiet": {"load_before_1m": 0.2, "steal_jiffies": 85},
-        # pre-r14 artifact shape (no steal field): load rule decides
-        "legacy": {"load_before_1m": 0.2},
-    }
-    confirmed, unadj = bench.classify_flags(flagged, remeasured, 1.0)
-    assert set(confirmed) == {"quiet", "legacy"}
-    assert set(unadj) == {"stolen"}
-    assert "steal" in unadj["stolen"]["why"]

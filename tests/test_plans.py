@@ -530,20 +530,29 @@ def test_global_window_sites_are_inventoried():
 
 
 def test_env_knobs_are_inventoried():
-    """Every SPARK_GRAFT_* environment variable the package reads is an
-    option every test and benchmark configuration must cover, so the
-    set is pinned: a new knob fails here until it is added on purpose.
+    """Every SPARK_GRAFT_* environment variable the package, bench.py or
+    scripts/ reads is an option every test and benchmark configuration
+    must cover, so the set is pinned: a new knob fails here until it is
+    added on purpose.
 
-    Current inventory: SPARK_GRAFT_CPUS (local thread count),
-    SPARK_GRAFT_DRIVER_MEM (driver heap) and SPARK_GRAFT_SF_DIR (the
-    default testdata directory) — deployment settings, not behaviour
-    switches."""
+    Current inventory: the package reads SPARK_GRAFT_CPUS (local thread
+    count) and SPARK_GRAFT_DRIVER_MEM (driver heap); bench.py and
+    scripts/ add SPARK_GRAFT_SF_DIR (the testdata directory they time or
+    explain) — deployment settings, not behaviour switches."""
     import re
     from pathlib import Path
 
-    pkg = Path(__file__).resolve().parent.parent / "argostats_spark"
+    root = Path(__file__).resolve().parent.parent
     pat = re.compile(r"SPARK_GRAFT_[A-Z_]+")
-    found = {m for p in pkg.rglob("*.py") for m in pat.findall(p.read_text())}
-    assert found == {
+
+    def knobs(paths):
+        return {m for p in paths for m in pat.findall(p.read_text())}
+
+    pkg = knobs((root / "argostats_spark").rglob("*.py"))
+    tools = knobs([root / "bench.py", *(root / "scripts").glob("*.py")])
+    assert pkg == {
+        "SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM",
+    }, f"package env-knob inventory drifted: {sorted(pkg)}"
+    assert pkg | tools == {
         "SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "SPARK_GRAFT_SF_DIR",
-    }, f"env-knob inventory drifted: {sorted(found)}"
+    }, f"env-knob inventory drifted: {sorted(pkg | tools)}"
