@@ -268,7 +268,7 @@ def _lorenz_sql(z: str) -> tuple[str, str]:
 
 
 def _t25_bisection_sql(p10: str) -> str:
-    """The T25 EAPE variant (operators/atlas.py::_eape_cell_kernel
+    """The T25 EAPE variant (operators/atlas.py::_eape_kernel
     algo="T25"; reference atlas.py:194-231, 300-304) as SQL: the
     30-iteration vectorized bisection of functions/lorenz.py::
     gammat_analytic replayed as a recursive CTE, one 75-term-polynomial

@@ -13,14 +13,15 @@ Spark-first re-expression:
   (P10/X9, atlas.py:266-272)
 - the tile/halo machinery becomes the binned neighborhood join
   (operators/spatial.py) — one equi-join shuffle, no tiles to assemble
-- the weighted per-level mean (A1-A3) runs per cell on Arrow batches
-  (applyInArrow), NumPy-vectorized over the (profiles × 64 levels)
-  block, exactly the reference's inner kernel shape
+- the weighted per-level mean (A1-A3) runs once per Arrow batch, not
+  once per cell: the pairs are repartitioned by cell and sorted within
+  partitions, and one mapInArrow call sums every cell run of the batch
+  with np.add.reduceat over the (pairs × 64 levels) block
 - EAPE (A4, R14 algorithm) needs only the cell's own mean profile, and
-  the cell's pair group already holds everything that mean needs: one
-  group kernel computes the mean (rounded through f4, as the stored
-  atlas is) and then the EAPE against it — one pair exchange, no
-  second pass, no means join-back.
+  the cell's pair run already holds everything that mean needs: the
+  same batch kernel computes the means (rounded through f4, as the
+  stored atlas is) and then the EAPE against them — one pair exchange,
+  no second pass, no means join-back.
 
 Scale note: a profile within kernel radius of k cells appears k times
 in the pair set — that amplification is inherent to the kernel support
@@ -122,19 +123,6 @@ _TS_SCHEMA = T.StructType([
 ])
 
 
-def _level_means(coef: np.ndarray, n_lev: np.ndarray, *blocks: np.ndarray):
-    """Per-level weighted means Σ(coef·x)/Σcoef of (n, 64) blocks, 0 on
-    levels with no weight — the one f8 formula every cell kernel uses
-    (A1-A3, atlas.py:93-142)."""
-    ok = n_lev > 0
-    out = []
-    for x in blocks:
-        m = np.zeros(NLEVELS, dtype="f8")
-        m[ok] = (coef * x).sum(axis=0)[ok] / n_lev[ok]
-        out.append(m)
-    return out
-
-
 def _levels(table, name: str) -> np.ndarray:
     """An Arrow list<float> column of 64-level arrays as an (n, 64) f8
     block."""
@@ -147,41 +135,101 @@ def _levels(table, name: str) -> np.ndarray:
     )
 
 
-def _one_cell(glon, glat, n: int, **arrays: np.ndarray):
-    """The one-row Arrow table a cell kernel returns: key, pair count
-    and its 64-level arrays stored as f4."""
+def _run_starts(table) -> np.ndarray:
+    """First row of every (glon, glat) run of a cell-sorted table."""
+    glon, glat = (table.column(c).to_numpy() for c in ("glon", "glat"))
+    change = (glon[1:] != glon[:-1]) | (glat[1:] != glat[:-1])
+    return np.concatenate(([0], np.flatnonzero(change) + 1))
+
+
+def _run_sums(x: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    # + 0.0: an all −0.0 run sums to +0.0, as ndarray.sum (from 0) does
+    return np.add.reduceat(x, starts, axis=0) + 0.0
+
+
+def _run_weights(table, starts: np.ndarray, theta: float):
+    """Kernel coefficients w·IDX per (pair, level) and their per-level
+    sums per cell run."""
+    hav = table.column("hav").to_numpy().astype("f8")
+    coef = np.exp(-hav / theta)[:, None] * _levels(table, "IDX")
+    return coef, _run_sums(coef, starts)
+
+
+def _run_means(coef, n_lev, starts: np.ndarray, *blocks: np.ndarray):
+    """Per-run, per-level weighted means Σ(coef·x)/Σcoef of (n, 64)
+    blocks, 0 on levels with no weight — the one f8 formula both cell
+    kernels use (A1-A3, atlas.py:93-142)."""
+    return [
+        np.divide(_run_sums(coef * x, starts), n_lev,
+                  out=np.zeros_like(n_lev), where=n_lev > 0)
+        for x in blocks
+    ]
+
+
+def _by_cell_runs(pairs: DataFrame, kernel, schema: T.StructType) -> DataFrame:
+    """One exchange by cell, sorted within partitions, then one
+    ``kernel(table, starts)`` call per Arrow batch over its complete cell
+    runs. A batch's last run may continue in the next batch: it is held
+    back as a list of chunks, concatenated once when it closes (O(rows)
+    for any number of batches), and flushed after the last batch."""
     import pyarrow as pa
 
-    offs = pa.array(np.array([0, NLEVELS], dtype="i4"))
-    return pa.table({
-        "glon": pa.array([float(glon)], pa.float64()),
-        "glat": pa.array([float(glat)], pa.float64()),
-        "n_points": pa.array([n], pa.int32()),
-        **{k: pa.ListArray.from_arrays(offs, pa.array(v.astype("f4")))
+    def flush(chunks):
+        table = pa.Table.from_batches(chunks)
+        return kernel(table, _run_starts(table))
+
+    def key(rb):  # the cell of a batch's first row
+        return rb.column("glon")[0].as_py(), rb.column("glat")[0].as_py()
+
+    def run(batches):
+        limit_blas_threads()
+        pending = []
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            last = int(_run_starts(rb)[-1])
+            if last > 0:
+                yield flush(pending + [rb.slice(0, last)])
+                pending = []
+            elif pending and key(pending[0]) != key(rb):
+                yield flush(pending)
+                pending = []
+            pending.append(rb.slice(last))
+        if pending:
+            yield flush(pending)
+
+    # pin parallelism for the Python stage (AQE coalescing targets
+    # bytes, not UDF CPU — see interpolation.py note)
+    n = pairs.sparkSession.sparkContext.defaultParallelism
+    return (
+        pairs.repartition(n, "glon", "glat").sortWithinPartitions("glon", "glat")
+        .mapInArrow(run, schema)
+    )
+
+
+def _cell_rows(table, starts: np.ndarray, **arrays: np.ndarray):
+    """The output batch of a cell kernel: one row per run — key, pair
+    count and its 64-level arrays stored as f4."""
+    import pyarrow as pa
+
+    offs = pa.array(np.arange(0, (len(starts) + 1) * NLEVELS, NLEVELS, dtype="i4"))
+    return pa.record_batch({
+        **{c: pa.array(table.column(c).to_numpy()[starts]) for c in ("glon", "glat")},
+        "n_points": pa.array(np.diff(starts, append=table.num_rows).astype("i4")),
+        **{k: pa.ListArray.from_arrays(offs, pa.array(v.astype("f4").ravel()))
            for k, v in arrays.items()},
     })
 
 
-def _cell_weights(table, theta: float) -> tuple[np.ndarray, np.ndarray]:
-    """Kernel coefficients w·IDX per (pair, level) and their per-level
-    sums for one cell's pair group."""
-    hav = table.column("hav").to_numpy(zero_copy_only=False).astype("f8")
-    coef = np.exp(-hav / theta)[:, None] * _levels(table, "IDX")
-    return coef, coef.sum(axis=0)
+def _ts_kernel(theta: float):
+    """Weighted means of CT/SR over each cell's pair run."""
 
-
-def _ts_cell_kernel_arrow(theta: float):
-    """Per-cell weighted means of CT/SR over the cell's pair group, on
-    the Arrow batch (flat list buffers, no pandas object columns)."""
-
-    def kernel(key, table):
-        limit_blas_threads()
-        glon, glat = (k.as_py() if hasattr(k, "as_py") else k for k in key)
-        coef, n_lev = _cell_weights(table, theta)
-        ct_m, sr_m = _level_means(
-            coef, n_lev, _levels(table, "CT"), _levels(table, "SR")
+    def kernel(table, starts):
+        coef, n_lev = _run_weights(table, starts, theta)
+        ct_m, sr_m = _run_means(
+            coef, n_lev, starts, _levels(table, "CT"), _levels(table, "SR")
         )
-        return _one_cell(glon, glat, table.num_rows, CT=ct_m, SR=sr_m, W=n_lev)
+        return _cell_rows(table, starts, CT=ct_m, SR=sr_m, W=n_lev)
 
     return kernel
 
@@ -218,29 +266,20 @@ def clim_ts(
 ) -> DataFrame:
     """Weighted-mean CT/SR climatology per ocean grid cell (the
     reference's clim_TS, atlas.py:427-437 → proceed_TS_tile:256-279):
-    one Arrow group kernel per cell (applyInArrow).
-
-    Measured in round 5 at the 1/4°-global group shape
-    (scripts/bench_atlas.py, local[32], warm-min of 3): 128k cells /
-    4.3M pairs — the Arrow kernel 7.3s vs an applyInPandas kernel 38.3s
-    (5.3×) vs exploded 27.8s; 400 cells / 454k pairs — 1.7s vs 5.5s
-    (3.2×). clim_ts_exploded is the independent reference the tests
+    the pair set is repartitioned by cell once, sorted within
+    partitions, and one NumPy call per Arrow batch computes every cell
+    run in it (mapInArrow, :func:`_by_cell_runs`) — not one Python call
+    per cell. clim_ts_exploded is the independent reference the tests
     compare this kernel against."""
     theta = math.sin(math.radians(smoothing_factor * reso_deg) / 2.0) ** 2
     if pairs is None:
         pairs = match_pairs(grid, profiles, reso_deg, smoothing_factor)
-    # pin parallelism for the Python kernel stage (AQE coalescing targets
-    # bytes, not UDF CPU — see interpolation.py note)
-    n = pairs.sparkSession.sparkContext.defaultParallelism
-    # ship only what the kernel reads (round 14, guide §4.1):
-    # applyInArrow forwards EVERY input column into the Python worker,
-    # so the join's lon/lat (16 B/pair, unused by the kernel) would
-    # otherwise cross the repartition exchange AND the Arrow boundary
-    # on every pair row
-    return (
-        pairs.select("glon", "glat", "hav", "CT", "SR", "IDX")
-        .repartition(n, "glon", "glat").groupBy("glon", "glat")
-        .applyInArrow(_ts_cell_kernel_arrow(theta), _TS_SCHEMA)
+    # ship only what the kernel reads (round 14): the join's lon/lat
+    # (16 B/pair) would otherwise cross the exchange AND the Arrow
+    # boundary on every pair row
+    return _by_cell_runs(
+        pairs.select("glon", "glat", "hav", "CT", "SR", "IDX"),
+        _ts_kernel(theta), _TS_SCHEMA,
     )
 
 
@@ -256,7 +295,7 @@ def clim_ts_exploded(
     entirely in whole-stage codegen, reassemble arrays with
     sort_array(collect_list(...)).
 
-    Tradeoff vs the Arrow group kernel (clim_ts): 64× the shuffle rows
+    Tradeoff vs the Arrow cell-run kernel (clim_ts): 64× the shuffle rows
     but no Python workers and true partial aggregation (map-side
     combine shrinks the exchange to |cells|×64 rows regardless of pair
     count).
@@ -264,7 +303,8 @@ def clim_ts_exploded(
     ATLAS_BENCH (scripts/bench_atlas.py, local[32], 454k pairs / 400
     cells): a pandas group kernel 2.2s vs exploded 3.9s warm — the
     batched NumPy matrix kernel wins at regional scale (the Arrow
-    kernel by more, see clim_ts), so it is the default (clim_ts). The exploded form bounds its EXCHANGE by map_tasks ×
+    kernel by more, SCALE.md), so it is the default (clim_ts). The
+    exploded form bounds its EXCHANGE by map_tasks ×
     |cells| × 64 partial-agg rows independent of pair count, where the
     kernel variant shuffles the full pair set with arrays attached
     (~850 B/pair). Measured at sf1-equivalent (3M profiles, 352M pairs,
@@ -309,7 +349,7 @@ def clim_ts_exploded(
     )
 
 
-# measured pair-shuffle cost of the group-kernel variant (clim_ts):
+# measured pair-shuffle cost of the kernel variant (clim_ts):
 # ~850 bytes per (cell, profile) pair with the 64-level arrays attached
 # (SCALE.md)
 PAIR_SHUFFLE_BYTES = 850
@@ -325,9 +365,10 @@ def estimate_pair_count(
     """EXACT size of the binned neighborhood join's output before the
     haversine cutoff (an upper bound on the pair set, ~4/π over it for
     uniform density): Σ_bins |exploded grid rows| × |profiles|. One
-    union of bin rows tagged by side, counted per bin — map-side
-    combined to one row per occupied bin, O(profiles + cells) — and one
-    driver scalar; nothing like the join itself runs."""
+    union of bin rows tagged by side, coalesced to one partition so the
+    per-bin count and the sum over bins run in one stage with no
+    exchange: one Spark job, O(profiles + cells) rows of two bin columns
+    read by one task; nothing like the join itself runs."""
     radius = smoothing_factor * reso_deg
     bin_deg = max(radius, 1.0)
     pred = F.col("FLAG") == 1
@@ -341,7 +382,7 @@ def estimate_pair_count(
         *bins, F.lit(0).alias("n_g"), F.lit(1).alias("n_p")
     )
     row = (
-        g.unionByName(p).groupBy(*bins)
+        g.unionByName(p).coalesce(1).groupBy(*bins)
         .agg((F.sum("n_g") * F.sum("n_p")).alias("pairs"))
         .agg(F.sum("pairs").alias("pairs"))
         .first()
@@ -375,7 +416,7 @@ def clim_ts_auto(
 ) -> DataFrame:
     """A3 with automatic physical-variant selection (the SCALE.md
     crossover, previously a caller choice): estimate the pair-set
-    shuffle of the clim_ts group kernel; if it fits the budget the
+    shuffle of the clim_ts kernel; if it fits the budget the
     Arrow+NumPy kernel wins (measured 2.6-2.9×), otherwise route to the
     exploded expression aggregate whose exchange is pair-count-
     independent (map-side combine to |cells|×64 rows) — a global polar-
@@ -495,35 +536,35 @@ def _eape_integrand(
     raise ValueError(f"unknown EAPE algo {algo!r} (R14 or T25)")
 
 
-def _eape_cell_kernel(theta: float, algo: str = "R14", feat: str | None = None):
-    """Per-cell EAPE in one pass over the cell's pair group: the cell's
-    weighted-mean profile (clim_ts's formula, rounded through f4 as the
-    stored atlas is), then the per-pair integrand against it and its
-    weighted mean. ``feat="EI"`` reads the per-profile T25 integrand
-    from the payload (see _eape_profile_features); feat=None computes
-    eape_i here from the pair's CT/SR."""
+def _eape_kernel(theta: float, algo: str = "R14", feat: str | None = None):
+    """EAPE of each cell's pair run: the cell's weighted-mean profile
+    (clim_ts's formula, rounded through f4 as the stored atlas is), then
+    the per-pair integrand against it and its weighted mean.
+    ``feat="EI"`` reads the per-profile T25 integrand from the payload
+    (see _eape_profile_features); feat=None computes eape_i here from
+    the pair's CT/SR, one run at a time against that cell's curve."""
     pref = pref64().astype("f8")
     unit = eape_unit()
 
-    def kernel(key, table):
-        limit_blas_threads()
-        glon, glat = (k.as_py() if hasattr(k, "as_py") else k for k in key)
-        coef, n_lev = _cell_weights(table, theta)
+    def kernel(table, starts):
+        coef, n_lev = _run_weights(table, starts, theta)
         ct, sr = _levels(table, "CT"), _levels(table, "SR")
-        ct_bar, sr_bar = (
-            m.astype("f4").astype("f8") for m in _level_means(coef, n_lev, ct, sr)
-        )
+        ct_bar, sr_bar = (m.astype("f4").astype("f8")
+                          for m in _run_means(coef, n_lev, starts, ct, sr))
         # mean-profile density + compressibility factor (atlas.py:316-324)
-        rho_bar = rho(sr_bar, ct_bar, pref)
+        rho_bar = np.stack([rho(s, c, pref) for s, c in zip(sr_bar, ct_bar)])
         if feat == "EI":
             eape_i = _levels(table, "EI")
         else:
-            eape_i = _eape_integrand(
-                rho(sr, ct, pref[None, :]), sr, ct, rho_bar, ct_bar, sr_bar,
-                pref, unit, algo,
-            )
-        (eape_m,) = _level_means(coef, n_lev, eape_i)
-        return _one_cell(glon, glat, table.num_rows, RHO=rho_bar, EAPE=eape_m)
+            eape_i = np.empty_like(ct)
+            ends = np.append(starts[1:], table.num_rows)
+            for j, (a, b) in enumerate(zip(starts, ends)):
+                eape_i[a:b] = _eape_integrand(
+                    rho(sr[a:b], ct[a:b], pref[None, :]), sr[a:b], ct[a:b],
+                    rho_bar[j], ct_bar[j], sr_bar[j], pref, unit, algo,
+                )
+        (eape_m,) = _run_means(coef, n_lev, starts, eape_i)
+        return _cell_rows(table, starts, RHO=rho_bar, EAPE=eape_m)
 
     return kernel
 
@@ -586,7 +627,8 @@ def clim_eape(
     algo: str = "R14",
 ) -> DataFrame:
     """EAPE climatology in one pass: the pair set is repartitioned by
-    cell once, and one Arrow group kernel per cell computes the cell's
+    cell once and sorted within partitions, and one kernel call per
+    Arrow batch computes, for every cell run in it, the cell's
     weighted-mean profile and then the EAPE against it (A4). The means
     are rounded through f4 exactly as clim_ts stores them, so the
     output equals the two-pass composition (clim_ts means, then the
@@ -611,7 +653,6 @@ def clim_eape(
     shares between its TS and EAPE calls) always ships the per-pair
     payload — identical results on every path (pinned)."""
     theta = math.sin(math.radians(smoothing_factor * reso_deg) / 2.0) ** 2
-    n = grid.sparkSession.sparkContext.defaultParallelism
     cols = ["glon", "glat", "hav", "CT", "SR", "IDX"]
     feat = None
     if pairs is None and algo == "T25":
@@ -641,9 +682,7 @@ def clim_eape(
         cols.append(feat)
     elif pairs is None:
         pairs = match_pairs(grid, profiles, reso_deg, smoothing_factor)
-    # ship only what the kernel reads (see clim_ts); parallelism pinned
-    # for the Python stage as there
-    return (
-        pairs.select(*cols).repartition(n, "glon", "glat").groupBy("glon", "glat")
-        .applyInArrow(_eape_cell_kernel(theta, algo, feat), _EAPE_SCHEMA)
+    # ship only what the kernel reads (see clim_ts)
+    return _by_cell_runs(
+        pairs.select(*cols), _eape_kernel(theta, algo, feat), _EAPE_SCHEMA
     )

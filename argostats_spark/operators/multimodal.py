@@ -409,6 +409,13 @@ PHASH_SCHEMA = T.StructType(
 )
 
 
+def _phash_frame(out: dict) -> pd.DataFrame:
+    """A signature batch with ``phash`` as nullable Int64: a NULL in a
+    plain int list would make the column float64, and every signature
+    in the batch would lose its low bits."""
+    return pd.DataFrame({**out, "phash": pd.array(out["phash"], dtype="Int64")})
+
+
 def image_phash_table(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
     """mapInPandas perceptual-hash pass: (media_id, phash, decoded) —
     one decode per payload, 8 signature bytes out; payloads that need
@@ -431,7 +438,7 @@ def image_phash_table(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
                     # (review finding r8)
                     out["phash"].append(None)
                     out["decoded"].append(False)
-            yield pd.DataFrame(out)
+            yield _phash_frame(out)
 
     balanced = media.repartition(
         max(media.rdd.getNumPartitions(), 1),
@@ -489,7 +496,7 @@ def audio_fingerprint_table(media: DataFrame) -> DataFrame:
                     # same quarantine posture as image_phash_table
                     out["phash"].append(None)
                     out["decoded"].append(False)
-            yield pd.DataFrame(out)
+            yield _phash_frame(out)
 
     balanced = media.repartition(
         max(media.rdd.getNumPartitions(), 1),

@@ -2597,7 +2597,7 @@ def q_argo_atlas_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     levels → materialized parquet intermediate → binned neighborhood
     join → kernel-weighted TS climatology (A1-A3) → one-pass R14 EAPE
     (A4: per cell, mean profile → isopycnal displacement → weighted
-    mean in one group kernel; reference atlas.py:152-191, 281-298).
+    mean in one cell-run kernel; reference atlas.py:152-191, 281-298).
 
     The interpolated profiles are written to a parquet temp-path and
     read back, so the DuckDB oracle (atlas_oracle.py) brute-forces the

@@ -846,6 +846,69 @@ def test_eape_one_pass_equals_two_pass_composition(spark, profiles):
             pd.testing.assert_frame_equal(got, want, check_exact=True)
 
 
+def test_cell_runs_do_not_depend_on_batch_cuts_or_partitions(spark, profiles, monkeypatch):
+    """clim_ts and clim_eape walk the sorted cell runs of each Arrow
+    batch and hold back a run that continues into the next batch. Their
+    rows must not depend on where the batches cut the runs (5 rows a
+    batch, so most cells span several) or on how many partitions share
+    the cells (the pair repartition at 1 partition instead of
+    defaultParallelism): exactly the default run's rows, for clim_ts
+    and clim_eape R14, T25 and cached ``pairs=``. The one-cell grid's
+    cell spans more than 3 batches."""
+    import re
+
+    from pyspark import SparkContext
+
+    # a 40° kernel radius, so cells hold many pairs of the small fixture
+    reso, sm = 10.0, 4.0
+    world = make_grid(spark, (-180.0, 180.0, -80.0, 80.0), reso)
+    big = clim_ts(world, profiles, reso, sm).orderBy(F.desc("n_points")).first()
+    assert big.n_points > 15
+    grids = {
+        "world": world,
+        "one": make_grid(
+            spark, (big.glon - 5, big.glon + 5, big.glat - 5, big.glat + 5), reso
+        ),
+    }
+
+    def results():
+        out = {}
+        for name, grid in grids.items():
+            pairs = match_pairs(grid, profiles, reso, sm).localCheckpoint(eager=True)
+            dfs = {
+                "ts": clim_ts(grid, profiles, reso, sm),
+                "r14": clim_eape(grid, profiles, reso, sm, algo="R14"),
+                "t25": clim_eape(grid, profiles, reso, sm, algo="T25"),
+                "r14_pairs": clim_eape(grid, profiles, reso, sm, pairs=pairs, algo="R14"),
+                "t25_pairs": clim_eape(grid, profiles, reso, sm, pairs=pairs, algo="T25"),
+            }
+            for key, df in dfs.items():
+                # the cell exchange, above the cached profiles' lineage:
+                # hashpartitioning(glon, glat, n), or SinglePartition at n=1
+                plan = df._jdf.queryExecution().executedPlan().toString()
+                plan = plan.partition("InMemoryRelation")[0]
+                exch = re.findall(r"Exchange (\w+).*REPARTITION_BY_NUM", plan)
+                out[name, key] = (exch, df.orderBy("glon", "glat").toPandas())
+        return out
+
+    want = results()
+    assert want["one", "ts"][1].n_points.tolist() == [big.n_points]
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    spark.conf.set(conf, "5")
+    try:
+        cut = results()
+    finally:
+        spark.conf.unset(conf)
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda self: 1))
+    single = results()
+    for k, (exch, frame) in want.items():
+        assert len(frame) > 0, k
+        assert exch == ["hashpartitioning"], (k, exch)
+        assert single[k][0] == ["SinglePartition"], (k, single[k][0])
+        pd.testing.assert_frame_equal(cut[k][1], frame, check_exact=True)
+        pd.testing.assert_frame_equal(single[k][1], frame, check_exact=True)
+
+
 def test_eape_fast_path_equals_legacy_pairs_path(spark, profiles):
     """Round 14: clim_eape with pairs=None routes through
     _eape_profile_features (the per-PROFILE density/bisection pass —
@@ -893,12 +956,13 @@ def test_eape_fast_path_equals_legacy_pairs_path(spark, profiles):
 
 def test_eape_fast_path_plan_exchange_excludes_bar_arrays(spark, profiles):
     """Plan pin of the one-pass EAPE: ONE exchange, hash-partitioned by
-    (glon, glat), straight under ONE FlatMapGroupsInArrow — no join
-    between them (the cell means are computed in the kernel, not joined
-    back), no *_BAR column anywhere, and the exchange ships only what
-    the kernel reads (no lon/lat join coordinates). R14 ships the
-    per-pair CT/SR; T25 ships the per-profile EI plus CT/SR for the
-    cell means."""
+    (glon, glat), straight under ONE MapInArrow cell-run kernel (only a
+    sort between them) — no FlatMapGroupsInArrow, no join between them
+    (the cell means are computed in the kernel, not joined back), no
+    *_BAR column anywhere, and the exchange ships only what the kernel
+    reads (no lon/lat join coordinates). R14 ships the per-pair CT/SR;
+    T25 ships the per-profile EI plus CT/SR for the cell means (its
+    feature pass is a second MapInArrow, below the exchange)."""
     from argostats_spark.operators.atlas import clim_eape, make_grid
 
     grid = make_grid(spark, (-180.0, 180.0, -60.0, 64.0), reso_deg=10.0)
@@ -909,11 +973,12 @@ def test_eape_fast_path_plan_exchange_excludes_bar_arrays(spark, profiles):
         # the cached profiles print their own lineage (the interpolation
         # kernel) inside InMemoryRelation; the EAPE plan is the prefix
         plan = plan.partition("InMemoryRelation")[0]
-        assert plan.count("FlatMapGroupsInArrow") == 1, plan[:2000]
+        assert "FlatMapGroupsInArrow" not in plan, plan[:2000]
         assert plan.count("Exchange hashpartitioning(glon") == 1, plan[:2000]
-        kernel_pos = plan.index("FlatMapGroupsInArrow")
+        kernel_pos = plan.index("MapInArrow")
         exch_pos = plan.index("Exchange hashpartitioning(glon")
         assert kernel_pos < exch_pos
+        assert plan[:exch_pos].count("MapInArrow") == 1, plan[:2000]
         assert "Join" not in plan[kernel_pos:exch_pos], plan[:2000]
         exch_line = next(
             line for line in plan.splitlines()
@@ -945,10 +1010,11 @@ def test_jobs_per_call_pinned(spark, tmp_path):
     """Per-call Spark job counts of the argo pass on a tiny stored
     input (driver and per-job overhead, not kernel math, set the wall
     time at small scale): build_summary 2 (the window's exchange and
-    the result — no platform dim broadcast), estimate_pair_count 3
-    (one tagged union counted per bin, then the scalar), clim_ts_auto
-    and clim_eape 3 each (grid broadcast, pair exchange, result — no
-    grid cross join, no means pass or join-back)."""
+    the result — no platform dim broadcast), estimate_pair_count 1
+    (one tagged union in one partition, counted per bin and summed in
+    the same stage), clim_ts_auto and clim_eape 3 each (grid broadcast,
+    pair exchange, result — no grid cross join, no means pass or
+    join-back)."""
     from argostats_spark.operators.atlas import clim_ts_auto, estimate_pair_count
 
     make_raw(spark, n_wmos=2, profiles_per_wmo=4, seed=3).write.parquet(str(tmp_path / "raw"))
@@ -970,7 +1036,7 @@ def test_jobs_per_call_pinned(spark, tmp_path):
     }
     got = {name: _jobs(spark, fn) for name, fn in calls.items()}
     assert got == {
-        "build_summary": 2, "estimate_pair_count": 3, "clim_ts_auto": 3, "clim_eape": 3,
+        "build_summary": 2, "estimate_pair_count": 1, "clim_ts_auto": 3, "clim_eape": 3,
     }
 
 

@@ -272,9 +272,10 @@ def test_registry_plans_free_of_antipatterns(spark, sf_dir):
 def test_eape_one_pass_reuses_cached_pairs(spark):
     """SURVEY §7.4.2: clim_eape must consume the CACHED pair set (not
     re-derive its lineage) and compute each cell's mean profile inside
-    its own group kernel — no pass-1 means, no join-back. With the pair
-    set materialized the EAPE plan collapses to: one InMemoryTableScan,
-    ONE (glon, glat) exchange, ONE Python kernel, no join."""
+    its own cell-run kernel — no pass-1 means, no join-back. With the
+    pair set materialized the EAPE plan collapses to: one
+    InMemoryTableScan, ONE (glon, glat) exchange, ONE MapInArrow kernel
+    (no per-cell FlatMapGroupsInArrow), no join."""
     from argostats_spark.operators.atlas import clim_eape, make_grid, match_pairs
     from argostats_spark.operators.interpolation import interpolate_profiles
     from argostats_spark.sources.synthetic import make_raw
@@ -291,7 +292,8 @@ def test_eape_one_pass_reuses_cached_pairs(spark):
         # its InMemoryRelation description; the EAPE skeleton is the
         # prefix before it (kernel → exchange → cache scan)
         pre, _, _ = plan.partition("InMemoryRelation")
-        assert pre.count("FlatMapGroupsIn") == 1, pre      # ONLY the EAPE kernel
+        assert pre.count("MapInArrow") == 1, pre           # ONLY the EAPE kernel
+        assert "FlatMapGroupsIn" not in pre, pre           # not one call per cell
         assert pre.count("Exchange hashpartitioning(glon") == 1, pre
         assert pre.count("InMemoryTableScan") == 1, pre    # cached pair set
         assert "Join" not in pre, pre                      # no means join-back

@@ -1577,6 +1577,42 @@ def test_audio_near_dups_finds_releveled_and_resampled_copies(spark):
     assert audio_hash64(r0, x0) == audio_hash64(r1, x1)
 
 
+def test_signatures_keep_all_64_bits_next_to_undecodable_payloads(spark):
+    """Every Spark-side image and audio signature equals the driver-side
+    dhash64 / audio_hash64 bit for bit, even when an undecodable payload
+    (NULL signature) shares the Arrow batch: ``coalesce(1)`` puts all
+    payloads in one batch on any core count. A NULL in a plain int
+    column would turn it float64 and drop the signatures' low bits."""
+    import hashlib
+
+    import numpy as np
+
+    from argostats_spark.operators.multimodal import (
+        audio_fingerprint_table, audio_hash64, decode_image, decode_wav,
+        dhash64, image_phash_table,
+    )
+
+    rng = np.random.default_rng(5)
+    imgs = [rng.integers(0, 255, (32, 48)).astype("u1") for _ in range(4)]
+    clips = [rng.uniform(-0.9, 0.9, 8000) for _ in range(4)]
+    cases = (
+        (image_phash_table, [_pgm(a) for a in imgs], b"\x89PNG not decodable here",
+         lambda p: dhash64(decode_image(p))),
+        (audio_fingerprint_table, [_wav(x) for x in clips], b"RIFFnotawave",
+         lambda p: audio_hash64(*decode_wav(p))),
+    )
+    for table, good, bad, local in cases:
+        payloads = [*good[:2], bad, *good[2:]]
+        media = spark.createDataFrame(
+            [(i, bytearray(p), "media", hashlib.sha256(p).hexdigest())
+             for i, p in enumerate(payloads)],
+            "media_id long, payload binary, kind string, sha256 string",
+        ).coalesce(1)
+        got = {r["media_id"]: r["phash"] for r in table(media).collect()}
+        want = {i: None if p == bad else local(p) for i, p in enumerate(payloads)}
+        assert got == want
+
+
 def test_sentence_chunker_streaming_equals_batch(spark, tmp_path):
     """chunk_documents_sentences is row-local (regexp pass + in-row
     fold + posexplode), so it must run unchanged on a readStream and
