@@ -28,11 +28,13 @@ def _natural_cubic_coeffs(x: np.ndarray, ys: np.ndarray) -> np.ndarray:
     one or more value columns at once.
 
     ``ys`` has shape (n,) or (n, k); returns the same shape. The
-    tridiagonal system is solved as one dense LAPACK call — a Python
-    Thomas loop costs ~n interpreter iterations per profile per
-    variable, which measured 4× slower end-to-end at Argo scale; the
-    dense solve is O(n³) but n≲1000 levels keeps it far below the
-    interpreter overhead, and one factorization serves every column.
+    tridiagonal system is solved as one dense LAPACK call, and one
+    factorization serves every column. The dense solve is O(n³) in the
+    level count: single-threaded, one profile takes 0.14 ms at 120
+    levels (a per-profile Thomas solve: 0.55 ms), 3.7 ms at 400 (2.3 ms)
+    and 49 ms at 1000 levels (4.9 ms) — so it is NOT cheap against the
+    interpreter overhead at 1000 levels. A Thomas sweep vectorized over
+    a WMO's profiles is ROADMAP item 3.
     """
     squeeze = ys.ndim == 1
     if squeeze:

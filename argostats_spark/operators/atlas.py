@@ -11,23 +11,25 @@ Spark-first re-expression:
   (F14, atlas.py:83-90) — no join, no job
 - optional land-mask gate as a broadcast join *before* compute
   (P10/X9, atlas.py:266-272)
-- the tile/halo machinery becomes the binned neighborhood join
-  (operators/spatial.py) — one equi-join shuffle, no tiles to assemble
-- the weighted per-level mean (A1-A3) runs once per Arrow batch, not
-  once per cell: the pairs are repartitioned by cell and sorted within
-  partitions, and one mapInArrow call sums every cell run of the batch
-  with np.add.reduceat over the (pairs × 64 levels) block
-- EAPE (A4, R14 algorithm) needs only the cell's own mean profile, and
-  the cell's pair run already holds everything that mean needs: the
-  same batch kernel computes the means (rounded through f4, as the
-  stored atlas is) and then the EAPE against them — one pair exchange,
-  no second pass, no means join-back.
+- the tiles with halos become one tile exchange: each grid cell goes to
+  its own tile of at least 4× the kernel radius, each profile to every
+  tile its kernel disc can touch, with a halo that widens towards the
+  poles instead of the fixed 3° (operators/spatial.py; arithmetic, no
+  broadcast, no join). The rows are repartitioned by tile once and
+  sorted within partitions, and one mapInArrow call per Arrow batch
+  computes every tile in it
+- inside a tile, the cells × profiles haversine matrix cut at the
+  kernel radius gives the weights, and each level's weighted sums are
+  matrix products (A1-A3)
+- EAPE (A4) needs only each cell's own mean profile, which the same
+  kernel has just computed (rounded through f4, as the stored atlas
+  is): TS, R14 and T25 come out of one call, with no means join-back.
 
-Scale note: a profile within kernel radius of k cells appears k times
-in the pair set — that amplification is inherent to the kernel support
-(the reference pays it as per-tile AOS copies, atlas.py:503-514). The
-pair set is the one thing worth caching between the TS and EAPE calls
-(SURVEY §7.4.2).
+Scale note: a profile is shipped once per tile its disc touches, about
+(1 + 2r/width)² ≈ 2.25 times (more near the poles, where the halo
+wraps the ring), not once per cell within radius as the pair set this
+replaced was (k ≈ 50 cells per profile at 2° with smoothing 4, ≈117 at
+1°; SCALE.md "Tile-halo atlas").
 """
 
 from __future__ import annotations
@@ -42,7 +44,13 @@ from pyspark.sql import types as T
 from ..functions.blas import limit_blas_threads
 from ..functions.teos10 import compute_cf, eape_unit, rho, sound_speed
 from ..schemas import DOMAINS, NLEVELS, pref64
-from .spatial import explode_neighbor_bins, neighborhood_join, with_bins
+from .spatial import (
+    explode_disc_tiles,
+    explode_neighbor_bins,
+    neighborhood_join,
+    with_bins,
+    with_tile,
+)
 
 # ---------------------------------------------------------------------------
 # Grid generation (F14)
@@ -110,76 +118,56 @@ def apply_ocean_mask(
 
 
 # ---------------------------------------------------------------------------
-# Pass 1: weighted per-level means of CT/SR (A1-A3)
+# The tile kernel: weighted per-level means of CT/SR (A1-A3) and EAPE (A4)
 # ---------------------------------------------------------------------------
 
-_TS_SCHEMA = T.StructType([
-    T.StructField("glon", T.DoubleType(), False),
-    T.StructField("glat", T.DoubleType(), False),
-    T.StructField("n_points", T.IntegerType(), False),
-    T.StructField("CT", T.ArrayType(T.FloatType()), False),
-    T.StructField("SR", T.ArrayType(T.FloatType()), False),
-    T.StructField("W", T.ArrayType(T.FloatType()), False),
-])
+def _schema(*arrays: str) -> T.StructType:
+    return T.StructType([
+        T.StructField("glon", T.DoubleType(), False),
+        T.StructField("glat", T.DoubleType(), False),
+        T.StructField("n_points", T.IntegerType(), False),
+        *(T.StructField(a, T.ArrayType(T.FloatType()), False) for a in arrays),
+    ])
+
+
+def _arrays(eape: dict[str, str]) -> tuple[str, ...]:
+    """The 64-level array columns of a clim_atlas row, in order."""
+    return ("CT", "SR", "W", *(("RHO", *eape) if eape else ()))
 
 
 def _levels(table, name: str) -> np.ndarray:
     """An Arrow list<float> column of 64-level arrays as an (n, 64) f8
     block."""
-    arr = table.column(name)
-    if hasattr(arr, "combine_chunks"):
-        arr = arr.combine_chunks()
     return (
-        arr.flatten().to_numpy(zero_copy_only=False)
+        table.column(name).combine_chunks().flatten().to_numpy(zero_copy_only=False)
         .astype("f8", copy=False).reshape(table.num_rows, NLEVELS)
     )
 
 
 def _run_starts(table) -> np.ndarray:
-    """First row of every (glon, glat) run of a cell-sorted table."""
-    glon, glat = (table.column(c).to_numpy() for c in ("glon", "glat"))
-    change = (glon[1:] != glon[:-1]) | (glat[1:] != glat[:-1])
-    return np.concatenate(([0], np.flatnonzero(change) + 1))
+    """First row of every tile run of a tile-sorted table."""
+    tile = table.column("tile").to_numpy()
+    return np.concatenate(([0], np.flatnonzero(tile[1:] != tile[:-1]) + 1))
 
 
-def _run_sums(x: np.ndarray, starts: np.ndarray) -> np.ndarray:
-    # + 0.0: an all −0.0 run sums to +0.0, as ndarray.sum (from 0) does
-    return np.add.reduceat(x, starts, axis=0) + 0.0
-
-
-def _run_weights(table, starts: np.ndarray, theta: float):
-    """Kernel coefficients w·IDX per (pair, level) and their per-level
-    sums per cell run."""
-    hav = table.column("hav").to_numpy().astype("f8")
-    coef = np.exp(-hav / theta)[:, None] * _levels(table, "IDX")
-    return coef, _run_sums(coef, starts)
-
-
-def _run_means(coef, n_lev, starts: np.ndarray, *blocks: np.ndarray):
-    """Per-run, per-level weighted means Σ(coef·x)/Σcoef of (n, 64)
-    blocks, 0 on levels with no weight — the one f8 formula both cell
-    kernels use (A1-A3, atlas.py:93-142)."""
-    return [
-        np.divide(_run_sums(coef * x, starts), n_lev,
-                  out=np.zeros_like(n_lev), where=n_lev > 0)
-        for x in blocks
-    ]
-
-
-def _by_cell_runs(pairs: DataFrame, kernel, schema: T.StructType) -> DataFrame:
-    """One exchange by cell, sorted within partitions, then one
-    ``kernel(table, starts)`` call per Arrow batch over its complete cell
-    runs. A batch's last run may continue in the next batch: it is held
-    back as a list of chunks, concatenated once when it closes (O(rows)
-    for any number of batches), and flushed after the last batch."""
+def _by_tile_runs(rows: DataFrame, kernel, schema: T.StructType) -> DataFrame:
+    """One exchange by tile, sorted within partitions — each tile's
+    profile rows first (their null glon sorts first), in content order,
+    then its cells — and one ``kernel(table, starts)`` call per Arrow
+    batch over its complete tile runs. A batch's last run may continue
+    in the next batch: it is held back as a list of chunks, concatenated
+    once when it closes (O(rows) for any number of batches), and flushed
+    after the last batch. The content order fixes each tile's summation
+    order, so results do not depend on partitioning, batch cuts or the
+    order the shuffle delivers rows in."""
     import pyarrow as pa
 
     def flush(chunks):
         table = pa.Table.from_batches(chunks)
         return kernel(table, _run_starts(table))
 
-    def key(rb):  # the cell of a batch's first row
-        return rb.column("glon")[0].as_py(), rb.column("glat")[0].as_py()
+    def key(rb):  # the tile of a batch's first row
+        return rb.column("tile")[0].as_py()
 
     def run(batches):
         limit_blas_threads()
@@ -200,38 +188,214 @@ def _by_cell_runs(pairs: DataFrame, kernel, schema: T.StructType) -> DataFrame:
 
     # pin parallelism for the Python stage (AQE coalescing targets
     # bytes, not UDF CPU — see interpolation.py note)
-    n = pairs.sparkSession.sparkContext.defaultParallelism
+    n = rows.sparkSession.sparkContext.defaultParallelism
     return (
-        pairs.repartition(n, "glon", "glat").sortWithinPartitions("glon", "glat")
+        rows.repartition(n, "tile")
+        .sortWithinPartitions("tile", "glon", "glat", "lat", "lon", "CT", "SR", "IDX")
         .mapInArrow(run, schema)
     )
 
 
-def _cell_rows(table, starts: np.ndarray, **arrays: np.ndarray):
-    """The output batch of a cell kernel: one row per run — key, pair
-    count and its 64-level arrays stored as f4."""
+def _hav(glon, glat, lon, lat) -> np.ndarray:
+    """functions.geo.haversine_arg of every (cell, profile) pair as a
+    (cells × profiles) matrix, in the same operation order."""
+    dphi = np.radians(lat[None, :] - glat[:, None]) / 2.0
+    dlam = np.radians(lon[None, :] - glon[:, None]) / 2.0
+    return (
+        np.sin(dphi) * np.sin(dphi)
+        + np.cos(np.radians(glat))[:, None] * np.cos(np.radians(lat))[None, :]
+        * np.sin(dlam) * np.sin(dlam)
+    )
+
+
+def _eape_integrand(
+    rho_i, sr, ct, rho_bar, ct_bar, sr_bar, pref, unit, algo: str
+):
+    """eape_i for one (profiles × 64) block: R14 against one cell's mean
+    profile, T25 against the global Lorenz profile (the cell arguments
+    unused)."""
+    if algo == "R14":
+        # displacement against the *local* cell-mean profile via
+        # isopycnal lookup (atlas.py:184-191)
+        cf = compute_cf(rho_bar, sound_speed(sr_bar, ct_bar, pref), pref)
+        ref_curve = np.maximum.accumulate(rho_bar * cf)
+        disp = np.interp(
+            (rho_i * cf[None, :]).ravel(), ref_curve, pref
+        ).reshape(rho_i.shape)
+        return 0.5 * unit * (rho_i - rho_bar[None, :]) * (disp - pref[None, :])
+    if algo == "T25":
+        # displacement against the *global* analytic Lorenz profile
+        # via gammat bisection (atlas.py:194-231, 300-304)
+        from ..functions.lorenz import (
+            gammat_analytic,
+            lorenz_reference_density,
+            pr_from_zref,
+        )
+
+        _, zref, _, _ = gammat_analytic(sr.ravel(), ct.ravel())
+        disp = pr_from_zref(zref).reshape(rho_i.shape)
+        rho_ref_here = lorenz_reference_density(pref)[None, :]
+        return 0.5 * unit * (rho_i - rho_ref_here) * (disp - pref[None, :])
+    raise ValueError(f"unknown EAPE algo {algo!r} (R14 or T25)")
+
+
+def _atlas_kernel(theta: float, eape: dict[str, str]):
+    """Every tile run of a batch: the cells × profiles haversine matrix,
+    cut at the kernel radius (hav <= θ), gives the weights; each level's
+    weighted sums are matrix products (A1-A3, atlas.py:93-142); then for
+    each requested EAPE column the integrand against the cell's mean
+    profile rounded through f4, as the stored atlas is (A4). R14 is per
+    (cell, profile) pair; T25 is per profile. Only cells with at least
+    one profile in radius come out."""
     import pyarrow as pa
 
-    offs = pa.array(np.arange(0, (len(starts) + 1) * NLEVELS, NLEVELS, dtype="i4"))
-    return pa.record_batch({
-        **{c: pa.array(table.column(c).to_numpy()[starts]) for c in ("glon", "glat")},
-        "n_points": pa.array(np.diff(starts, append=table.num_rows).astype("i4")),
-        **{k: pa.ListArray.from_arrays(offs, pa.array(v.astype("f4").ravel()))
-           for k, v in arrays.items()},
-    })
+    pref = pref64().astype("f8")
+    unit = eape_unit()
 
+    def mean(sums, n_lev):
+        return np.divide(sums, n_lev, out=np.zeros_like(n_lev), where=n_lev > 0)
 
-def _ts_kernel(theta: float):
-    """Weighted means of CT/SR over each cell's pair run."""
+    def one_tile(prof, cells):
+        glon, glat = (cells.column(c).to_numpy() for c in ("glon", "glat"))
+        hav = _hav(glon, glat, *(prof.column(c).to_numpy() for c in ("lon", "lat")))
+        near = hav <= theta
+        n_points = near.sum(axis=1)
+        keep = np.flatnonzero(n_points)
+        if not len(keep):
+            return None
+        used = np.flatnonzero(near[keep].any(axis=0))
+        near = near[np.ix_(keep, used)]
+        w = np.where(near, np.exp(-hav[np.ix_(keep, used)] / theta), 0.0)
+        idx, ct, sr = (_levels(prof, c)[used] for c in ("IDX", "CT", "SR"))
+        # + 0.0: a level whose terms are all −0.0 sums to +0.0
+        n_lev = w @ idx + 0.0
+        ct_m, sr_m = (mean(w @ (idx * x) + 0.0, n_lev) for x in (ct, sr))
+        out = {"glon": glon[keep], "glat": glat[keep], "n_points": n_points[keep],
+               "CT": ct_m, "SR": sr_m, "W": n_lev}
+        if not eape:
+            return out
+        ct_bar, sr_bar = (m.astype("f4").astype("f8") for m in (ct_m, sr_m))
+        # mean-profile density (atlas.py:316-324) and profile densities
+        out["RHO"] = rho_bar = rho(sr_bar, ct_bar, pref[None, :])
+        rho_i = rho(sr, ct, pref[None, :])
+        for name, algo in eape.items():
+            if algo != "R14":
+                e = _eape_integrand(rho_i, sr, ct, None, None, None, pref, unit, algo)
+                out[name] = mean(w @ (idx * e) + 0.0, n_lev)
+                continue
+            sums = np.empty_like(n_lev)
+            for j in range(len(keep)):
+                sel = np.flatnonzero(near[j])
+                e = _eape_integrand(
+                    rho_i[sel], sr[sel], ct[sel], rho_bar[j], ct_bar[j], sr_bar[j],
+                    pref, unit, algo,
+                )
+                sums[j] = w[j, sel] @ (idx[sel] * e) + 0.0
+            out[name] = mean(sums, n_lev)
+        return out
 
     def kernel(table, starts):
-        coef, n_lev = _run_weights(table, starts, theta)
-        ct_m, sr_m = _run_means(
-            coef, n_lev, starts, _levels(table, "CT"), _levels(table, "SR")
+        tiles = []
+        for a, b in zip(starts, np.append(starts[1:], table.num_rows)):
+            run = table.slice(a, b - a)
+            n_prof = run.column("glon").null_count
+            if 0 < n_prof < run.num_rows:
+                tiles.append(one_tile(run.slice(0, n_prof), run.slice(n_prof)))
+        tiles = [t for t in tiles if t is not None]
+        n = sum(len(t["glon"]) for t in tiles)
+        offs = pa.array(np.arange(0, (n + 1) * NLEVELS, NLEVELS, dtype="i4"))
+
+        def column(name):
+            v = np.concatenate([t[name] for t in tiles]) if tiles else np.empty(0)
+            if name in ("glon", "glat"):
+                return pa.array(v.astype("f8"))
+            if name == "n_points":
+                return pa.array(v.astype("i4"))
+            return pa.ListArray.from_arrays(offs, pa.array(v.astype("f4").ravel()))
+
+        return pa.record_batch(
+            {f: column(f) for f in ("glon", "glat", "n_points", *_arrays(eape))}
         )
-        return _cell_rows(table, starts, CT=ct_m, SR=sr_m, W=n_lev)
 
     return kernel
+
+
+def atlas_points(profiles: DataFrame, delayed_only: bool = True) -> DataFrame:
+    """P5 quality gate (reference atlas.py:253; ``delayed_only``
+    parameterizes its DATA_MODE test) → the (lon, lat, CT, SR, IDX)
+    rows the atlas reads."""
+    pred = F.col("FLAG") == 1
+    if delayed_only:
+        pred = pred & (F.col("DATA_MODE") == 1)
+    return profiles.filter(pred).select(
+        F.col("LONGITUDE").cast("double").alias("lon"),
+        F.col("LATITUDE").cast("double").alias("lat"),
+        "CT", "SR", "IDX",
+    )
+
+
+def clim_atlas(
+    grid: DataFrame,
+    points: DataFrame,
+    reso_deg: float,
+    smoothing_factor: float = 4.0,
+    eape: dict[str, str] | None = None,
+) -> DataFrame:
+    """The atlas in one tile exchange (reference clim_TS and clim_EAPE,
+    atlas.py:427-448, over its tiles with halos, :497-526): each grid
+    cell goes to its own tile and each gated point (:func:`atlas_points`)
+    to every tile its kernel disc can touch (operators/spatial.py — by
+    arithmetic, no broadcast, no join); the tagged rows are
+    repartitioned by tile once, and one NumPy call per Arrow batch
+    computes every tile in it (:func:`_atlas_kernel`).
+
+    Returns glon, glat, n_points and the weighted-mean CT, SR and their
+    weight W per cell with at least one point within radius; with
+    ``eape={column: algo}`` also the mean-profile density RHO and one
+    EAPE column per entry. algo="R14": isopycnal displacement against
+    the local cell-mean profile (Roullet et al. 2014); algo="T25":
+    displacement against the global analytic Lorenz profile via the
+    gammat bisection (Tailleux & Roullet 2025). Unlike the reference,
+    the algo switch can't leave variables unbound (atlas.py:439-448
+    defect, SURVEY §2.11); an unknown algo raises in the kernel at run
+    time."""
+    radius = smoothing_factor * reso_deg
+    theta = math.sin(math.radians(radius) / 2.0) ** 2
+    eape = dict(eape or {})
+    rows = with_tile(grid.select("glon", "glat"), "glon", "glat", radius).unionByName(
+        explode_disc_tiles(points.select("lon", "lat", "CT", "SR", "IDX"),
+                           "lon", "lat", radius),
+        allowMissingColumns=True,
+    )
+    return _by_tile_runs(rows, _atlas_kernel(theta, eape), _schema(*_arrays(eape)))
+
+
+def clim_ts(
+    grid: DataFrame,
+    profiles: DataFrame,
+    reso_deg: float,
+    smoothing_factor: float = 4.0,
+) -> DataFrame:
+    """Weighted-mean CT/SR climatology per ocean grid cell (the
+    reference's clim_TS, atlas.py:427-437 → proceed_TS_tile:256-279):
+    :func:`clim_atlas` without EAPE. clim_ts_exploded is the independent
+    reference the tests compare this kernel against."""
+    return clim_atlas(grid, atlas_points(profiles), reso_deg, smoothing_factor)
+
+
+def clim_eape(
+    grid: DataFrame,
+    profiles: DataFrame,
+    reso_deg: float,
+    smoothing_factor: float = 4.0,
+    algo: str = "R14",
+) -> DataFrame:
+    """EAPE climatology (A4): glon, glat, n_points, RHO and EAPE of
+    :func:`clim_atlas` for one ``algo``. The cell means behind it are
+    clim_ts's, rounded through f4 exactly as clim_ts stores them."""
+    return clim_atlas(
+        grid, atlas_points(profiles), reso_deg, smoothing_factor, eape={"EAPE": algo},
+    ).select("glon", "glat", "n_points", "RHO", "EAPE")
 
 
 def match_pairs(
@@ -241,45 +405,12 @@ def match_pairs(
     smoothing_factor: float = 4.0,
     delayed_only: bool = True,
 ) -> DataFrame:
-    """P5 quality gate + J2 neighborhood join → (cell × profile) pairs
-    with the exact haversine_arg. The pair set feeds both TS and EAPE
-    passes — cache it when computing both."""
-    pred = F.col("FLAG") == 1
-    if delayed_only:
-        pred = pred & (F.col("DATA_MODE") == 1)  # reference atlas.py:253 (P5, parameterized here)
-    pts = profiles.filter(pred).select(
-        F.col("LONGITUDE").cast("double").alias("lon"),
-        F.col("LATITUDE").cast("double").alias("lat"),
-        "CT", "SR", "IDX",
-    )
+    """P5 quality gate + J2 binned neighborhood join → (cell × profile)
+    pairs with the exact haversine_arg: the independent pair-set
+    reference the tests hold the tile kernel against."""
     return neighborhood_join(
-        grid, pts, radius_deg=smoothing_factor * reso_deg,
-    )
-
-
-def clim_ts(
-    grid: DataFrame,
-    profiles: DataFrame,
-    reso_deg: float,
-    smoothing_factor: float = 4.0,
-    pairs: DataFrame | None = None,
-) -> DataFrame:
-    """Weighted-mean CT/SR climatology per ocean grid cell (the
-    reference's clim_TS, atlas.py:427-437 → proceed_TS_tile:256-279):
-    the pair set is repartitioned by cell once, sorted within
-    partitions, and one NumPy call per Arrow batch computes every cell
-    run in it (mapInArrow, :func:`_by_cell_runs`) — not one Python call
-    per cell. clim_ts_exploded is the independent reference the tests
-    compare this kernel against."""
-    theta = math.sin(math.radians(smoothing_factor * reso_deg) / 2.0) ** 2
-    if pairs is None:
-        pairs = match_pairs(grid, profiles, reso_deg, smoothing_factor)
-    # ship only what the kernel reads (round 14): the join's lon/lat
-    # (16 B/pair) would otherwise cross the exchange AND the Arrow
-    # boundary on every pair row
-    return _by_cell_runs(
-        pairs.select("glon", "glat", "hav", "CT", "SR", "IDX"),
-        _ts_kernel(theta), _TS_SCHEMA,
+        grid, atlas_points(profiles, delayed_only),
+        radius_deg=smoothing_factor * reso_deg,
     )
 
 
@@ -288,34 +419,17 @@ def clim_ts_exploded(
     profiles: DataFrame,
     reso_deg: float,
     smoothing_factor: float = 4.0,
-    pairs: DataFrame | None = None,
 ) -> DataFrame:
-    """Pure-expression alternative to clim_ts (SURVEY §7.3 'benchmark
-    both'): posexplode the 64-level arrays, aggregate per (cell, level)
-    entirely in whole-stage codegen, reassemble arrays with
-    sort_array(collect_list(...)).
-
-    Tradeoff vs the Arrow cell-run kernel (clim_ts): 64× the shuffle rows
-    but no Python workers and true partial aggregation (map-side
-    combine shrinks the exchange to |cells|×64 rows regardless of pair
-    count).
-
-    ATLAS_BENCH (scripts/bench_atlas.py, local[32], 454k pairs / 400
-    cells): a pandas group kernel 2.2s vs exploded 3.9s warm — the
-    batched NumPy matrix kernel wins at regional scale (the Arrow
-    kernel by more, SCALE.md), so it is the default (clim_ts). The
-    exploded form bounds its EXCHANGE by map_tasks ×
-    |cells| × 64 partial-agg rows independent of pair count, where the
-    kernel variant shuffles the full pair set with arrays attached
-    (~850 B/pair). Measured at sf1-equivalent (3M profiles, 352M pairs,
-    1° global, polar skew — scripts/bench_atlas_scale.py, SCALE.md):
-    exploded completes in 361 s on one node; the kernel variant's
-    ~150 GB pair shuffle exceeds local disk (ENOSPC at ≥1.5M profiles).
-    Prefer exploded for global fine grids, extreme fan-in/skew, or
-    disk-constrained shuffle."""
+    """Pure-expression twin of clim_ts, the reference the tests compare
+    the tile kernel against (SURVEY §7.3 'benchmark both'): the pair set
+    of :func:`match_pairs`, posexploded over the 64 levels, aggregated
+    per (cell, level) in whole-stage codegen, and reassembled with
+    sort_array(collect_list(...)). No Python workers, but 64× the
+    shuffle rows and a broadcast of the exploded grid; it sums in a
+    different order, so it matches clim_ts to float tolerance, not
+    bitwise."""
     theta = math.sin(math.radians(smoothing_factor * reso_deg) / 2.0) ** 2
-    if pairs is None:
-        pairs = match_pairs(grid, profiles, reso_deg, smoothing_factor)
+    pairs = match_pairs(grid, profiles, reso_deg, smoothing_factor)
     w = F.exp(-F.col("hav") / F.lit(theta))
     ex = pairs.select(
         "glon", "glat", w.alias("w"),
@@ -347,12 +461,6 @@ def clim_ts_exploded(
         F.transform("z", lambda s: s["sr_m"].cast("float")).alias("SR"),
         F.transform("z", lambda s: s["n_lev"].cast("float")).alias("W"),
     )
-
-
-# measured pair-shuffle cost of the kernel variant (clim_ts):
-# ~850 bytes per (cell, profile) pair with the 64-level arrays attached
-# (SCALE.md)
-PAIR_SHUFFLE_BYTES = 850
 
 
 def estimate_pair_count(
@@ -395,15 +503,12 @@ def choose_clim_ts_variant(
     profiles: DataFrame,
     reso_deg: float,
     smoothing_factor: float = 4.0,
-    max_pair_shuffle_gb: float = 24.0,
 ) -> str:
-    """The routing decision of clim_ts_auto, separately callable (and
-    separately testable): 'kernel' while the estimated pair shuffle fits
-    the budget, else 'exploded'."""
-    est = estimate_pair_count(grid, profiles, reso_deg, smoothing_factor)
-    return (
-        "kernel" if est * PAIR_SHUFFLE_BYTES <= max_pair_shuffle_gb * 1e9 else "exploded"
-    )
+    """'kernel', without running a job. The tile kernel ships each
+    profile about (1 + 2r/width)² ≈ 2.25 times whatever the grid, so
+    there is no pair shuffle left to budget and route away from
+    (SCALE.md "Tile-halo atlas"). Kept for callers that name it."""
+    return "kernel"
 
 
 def clim_ts_auto(
@@ -411,27 +516,14 @@ def clim_ts_auto(
     profiles: DataFrame,
     reso_deg: float,
     smoothing_factor: float = 4.0,
-    max_pair_shuffle_gb: float = 24.0,
     variant: str | None = None,
 ) -> DataFrame:
-    """A3 with automatic physical-variant selection (the SCALE.md
-    crossover, previously a caller choice): estimate the pair-set
-    shuffle of the clim_ts kernel; if it fits the budget the
-    Arrow+NumPy kernel wins (measured 2.6-2.9×), otherwise route to the
-    exploded expression aggregate whose exchange is pair-count-
-    independent (map-side combine to |cells|×64 rows) — a global polar-
-    skewed fine grid at 3M profiles is 352M pairs ≈ 300 GB of kernel
-    shuffle, which ENOSPCed a single node but streams through the
-    exploded variant in 361 s (SCALE.md). ``variant`` forces
-    'kernel'/'exploded' explicitly."""
-    if variant is None:
-        variant = choose_clim_ts_variant(
-            grid, profiles, reso_deg, smoothing_factor, max_pair_shuffle_gb
-        )
-    if variant not in ("kernel", "exploded"):
+    """clim_ts, or clim_ts_exploded where ``variant="exploded"`` forces
+    it; runs no job of its own."""
+    fns = {None: clim_ts, "kernel": clim_ts, "exploded": clim_ts_exploded}
+    if variant not in fns:
         raise ValueError(f"unknown clim_ts variant: {variant!r}")
-    fn = clim_ts if variant == "kernel" else clim_ts_exploded
-    return fn(grid, profiles, reso_deg, smoothing_factor)
+    return fns[variant](grid, profiles, reso_deg, smoothing_factor)
 
 
 # per-variable units, matching the reference's UNITS table
@@ -490,199 +582,3 @@ def export_atlas_netcdf(
     gattrs = {"name": "Atlas of Argo statistics", **(global_attrs or {})}
     vattrs = {v: {"units": ATLAS_UNITS[v]} for v in variables if v in ATLAS_UNITS}
     write_netcdf3(path, dims, variables, global_attrs=gattrs, var_attrs=vattrs)
-
-
-# ---------------------------------------------------------------------------
-# EAPE, R14 and T25 algorithms (A4; atlas.py:152-231, 281-304)
-# ---------------------------------------------------------------------------
-
-_EAPE_SCHEMA = T.StructType([
-    T.StructField("glon", T.DoubleType(), False),
-    T.StructField("glat", T.DoubleType(), False),
-    T.StructField("n_points", T.IntegerType(), False),
-    T.StructField("RHO", T.ArrayType(T.FloatType()), False),
-    T.StructField("EAPE", T.ArrayType(T.FloatType()), False),
-])
-
-
-def _eape_integrand(
-    rho_i, sr, ct, rho_bar, ct_bar, sr_bar, pref, unit, algo: str
-):
-    """eape_i for one (rows × 64) block — shared by the cell kernel
-    (per-pair payload) and the per-profile T25 feature pass, so both
-    paths run the SAME elementwise f8 arithmetic."""
-    if algo == "R14":
-        # displacement against the *local* cell-mean profile via
-        # isopycnal lookup (atlas.py:184-191)
-        cf = compute_cf(rho_bar, sound_speed(sr_bar, ct_bar, pref), pref)
-        ref_curve = np.maximum.accumulate(rho_bar * cf)
-        disp = np.interp(
-            (rho_i * cf[None, :]).ravel(), ref_curve, pref
-        ).reshape(rho_i.shape)
-        return 0.5 * unit * (rho_i - rho_bar[None, :]) * (disp - pref[None, :])
-    if algo == "T25":
-        # displacement against the *global* analytic Lorenz profile
-        # via gammat bisection (atlas.py:194-231, 300-304)
-        from ..functions.lorenz import (
-            gammat_analytic,
-            lorenz_reference_density,
-            pr_from_zref,
-        )
-
-        _, zref, _, _ = gammat_analytic(sr.ravel(), ct.ravel())
-        disp = pr_from_zref(zref).reshape(rho_i.shape)
-        rho_ref_here = lorenz_reference_density(pref)[None, :]
-        return 0.5 * unit * (rho_i - rho_ref_here) * (disp - pref[None, :])
-    raise ValueError(f"unknown EAPE algo {algo!r} (R14 or T25)")
-
-
-def _eape_kernel(theta: float, algo: str = "R14", feat: str | None = None):
-    """EAPE of each cell's pair run: the cell's weighted-mean profile
-    (clim_ts's formula, rounded through f4 as the stored atlas is), then
-    the per-pair integrand against it and its weighted mean.
-    ``feat="EI"`` reads the per-profile T25 integrand from the payload
-    (see _eape_profile_features); feat=None computes eape_i here from
-    the pair's CT/SR, one run at a time against that cell's curve."""
-    pref = pref64().astype("f8")
-    unit = eape_unit()
-
-    def kernel(table, starts):
-        coef, n_lev = _run_weights(table, starts, theta)
-        ct, sr = _levels(table, "CT"), _levels(table, "SR")
-        ct_bar, sr_bar = (m.astype("f4").astype("f8")
-                          for m in _run_means(coef, n_lev, starts, ct, sr))
-        # mean-profile density + compressibility factor (atlas.py:316-324)
-        rho_bar = np.stack([rho(s, c, pref) for s, c in zip(sr_bar, ct_bar)])
-        if feat == "EI":
-            eape_i = _levels(table, "EI")
-        else:
-            eape_i = np.empty_like(ct)
-            ends = np.append(starts[1:], table.num_rows)
-            for j, (a, b) in enumerate(zip(starts, ends)):
-                eape_i[a:b] = _eape_integrand(
-                    rho(sr[a:b], ct[a:b], pref[None, :]), sr[a:b], ct[a:b],
-                    rho_bar[j], ct_bar[j], sr_bar[j], pref, unit, algo,
-                )
-        (eape_m,) = _run_means(coef, n_lev, starts, eape_i)
-        return _cell_rows(table, starts, RHO=rho_bar, EAPE=eape_m)
-
-    return kernel
-
-
-def _eape_profile_features(pts: DataFrame) -> DataFrame:
-    """The T25 integrand, computed ONCE per PROFILE instead of once per
-    (cell × profile) pair (round 14, guide §1.2 "the distributed
-    algorithm first").
-
-    A profile within kernel radius of k cells appears k times in the
-    pair set (k ≈ 12-20 at the bench grids, and it grows with the
-    kernel radius). T25 displaces against the global Lorenz profile, so
-    its whole integrand ``EI`` = 0.5·unit·(ρᵢ − ρref)·(disp − pref) —
-    the 75-term TEOS-10 density plus the 30-iteration gammat bisection
-    (30 more 75-term evaluations) — depends only on the profile's own
-    (SR, CT), and evaluating it in the cell kernel would re-pay it k
-    times. R14 displaces against the cell mean, so it has no such
-    cell-independent integrand.
-
-    Values are elementwise f8, identical arithmetic to the in-kernel
-    path (shared :func:`_eape_integrand`). CT/SR pass through: the cell
-    kernel still needs them for the cell-mean profile."""
-    import pyarrow as pa
-
-    pref = pref64().astype("f8")
-    unit = eape_unit()
-    keep = ("lon", "lat", "CT", "SR", "IDX")
-    schema = T.StructType([
-        *(pts.schema[c] for c in keep),
-        T.StructField("EI", T.ArrayType(T.DoubleType())),
-    ])
-
-    def gen(batches):
-        limit_blas_threads()
-        for tb in batches:  # RecordBatch per mapInArrow contract
-            n = tb.num_rows
-            if n == 0:
-                continue
-            sr, ct = _levels(tb, "SR"), _levels(tb, "CT")
-            # rho_bar/ct_bar/sr_bar unused by the T25 branch
-            ei = _eape_integrand(
-                rho(sr, ct, pref[None, :]), sr, ct, None, None, None,
-                pref, unit, "T25",
-            )
-            offs = pa.array(np.arange(0, (n + 1) * NLEVELS, NLEVELS, dtype="i4"))
-            yield pa.record_batch({
-                **{c: tb.column(c) for c in keep},
-                "EI": pa.ListArray.from_arrays(offs, pa.array(ei.ravel())),
-            })
-
-    return pts.mapInArrow(gen, schema)
-
-
-def clim_eape(
-    grid: DataFrame,
-    profiles: DataFrame,
-    reso_deg: float,
-    smoothing_factor: float = 4.0,
-    pairs: DataFrame | None = None,
-    algo: str = "R14",
-) -> DataFrame:
-    """EAPE climatology in one pass: the pair set is repartitioned by
-    cell once and sorted within partitions, and one kernel call per
-    Arrow batch computes, for every cell run in it, the cell's
-    weighted-mean profile and then the EAPE against it (A4). The means
-    are rounded through f4 exactly as clim_ts stores them, so the
-    output equals the two-pass composition (clim_ts means, then the
-    per-pair integrand) bit for bit (pinned by test).
-
-    algo="R14": isopycnal displacement against the local cell-mean
-    profile (Roullet et al. 2014). algo="T25": displacement against the
-    global analytic Lorenz profile via the gammat bisection (Tailleux &
-    Roullet 2025). Same dataflow, different integrand — unlike the
-    reference, the algo switch can't leave variables unbound
-    (atlas.py:439-448 defect, SURVEY §2.11); an unknown algo raises in
-    the kernel at run time.
-
-    T25 with the pair set built HERE (``pairs=None``): the whole
-    integrand is cell-independent, so it moves out of the cell kernel
-    into one per-PROFILE Arrow pass (:func:`_eape_profile_features`),
-    gated by a bin-cover semi-join so only profiles that can reach the
-    grid pay it. R14 keeps the per-pair payload (its cell-independent
-    part is one density evaluation; measured in round 14, the extra
-    Python pass costs more than the k-fold dedup saves). A
-    caller-supplied ``pairs`` (the cached pair set argo_atlas_pipeline
-    shares between its TS and EAPE calls) always ships the per-pair
-    payload — identical results on every path (pinned)."""
-    theta = math.sin(math.radians(smoothing_factor * reso_deg) / 2.0) ** 2
-    cols = ["glon", "glat", "hav", "CT", "SR", "IDX"]
-    feat = None
-    if pairs is None and algo == "T25":
-        radius = smoothing_factor * reso_deg
-        pred = (F.col("FLAG") == 1) & (F.col("DATA_MODE") == 1)
-        pts = profiles.filter(pred).select(
-            F.col("LONGITUDE").cast("double").alias("lon"),
-            F.col("LATITUDE").cast("double").alias("lat"),
-            "CT", "SR", "IDX",
-        )
-        # bin-cover semi-join BEFORE the feature pass: on a regional
-        # grid most profiles can't reach any cell, and the bisection
-        # must not run for them (on a global grid every bin is
-        # covered and this is one cheap broadcast semi-join). Same
-        # bin geometry as the neighborhood join ⇒ provably a superset
-        # of the join's point side.
-        bin_deg = max(radius, 1.0)
-        gbins = (
-            explode_neighbor_bins(grid, "glon", "glat", radius, bin_deg)
-            .select("lon_bin", "lat_bin").distinct()
-        )
-        pts = with_bins(pts, "lon", "lat", bin_deg).join(
-            F.broadcast(gbins), ["lon_bin", "lat_bin"], "left_semi"
-        ).drop("lon_bin", "lat_bin")
-        pairs = neighborhood_join(grid, _eape_profile_features(pts), radius_deg=radius)
-        feat = "EI"
-        cols.append(feat)
-    elif pairs is None:
-        pairs = match_pairs(grid, profiles, reso_deg, smoothing_factor)
-    # ship only what the kernel reads (see clim_ts)
-    return _by_cell_runs(
-        pairs.select(*cols), _eape_kernel(theta, algo, feat), _EAPE_SCHEMA
-    )

@@ -24,6 +24,13 @@ Equivalence to the brute-force cross join is property-tested
 (tests/test_spatial.py): the bin cover provably contains the kernel
 support, and the exact filter removes the rest. At 100 TB the equi-join
 on bins is the shuffle; the cross join it replaces is O(cells×rows).
+
+The atlas does not build that pair set: it uses the reference's tiles
+with halos, made exact — :func:`with_tile` puts each grid cell in its
+own tile, :func:`explode_disc_tiles` copies each point to every tile
+its radius disc can touch (the same adaptive halo, on the point side),
+and the atlas kernel meets them per tile (operators/atlas.py). The
+tile cover is property-tested against the same brute force.
 """
 
 from __future__ import annotations
@@ -103,6 +110,66 @@ def explode_neighbor_bins(
     return (
         g.withColumn("lon_bin", F.pmod(F.col("g_lon_bin") + F.col("_dlon"), F.lit(nlon)))
         .drop("g_lon_bin", "g_lat_bin", "_dlon", "_klon")
+    )
+
+
+def tile_layout(radius_deg: float) -> tuple[float, int, int]:
+    """Square tiles of at least 4·radius degrees whose width divides the
+    360° ring: (width, tiles around a latitude ring, tile rows from pole
+    to pole). A disc of that radius spans at most two tile rows and, off
+    the poles, about two tile columns: (1 + 2r/width)² ≈ 2.25 copies per
+    profile."""
+    n_lon = max(1, int(360.0 // (4.0 * radius_deg)))
+    width = 360.0 / n_lon
+    return width, n_lon, int(math.ceil(180.0 / width))
+
+
+def with_tile(df: DataFrame, lon_col: str, lat_col: str, radius_deg: float) -> DataFrame:
+    """Attach the ``tile`` a position lies in (the with_bins arithmetic
+    at tile width: modular longitude, top row clipped at 90°N)."""
+    width, n_lon, _ = tile_layout(radius_deg)
+    return with_bins(df, lon_col, lat_col, width, "_tcol", "_trow").withColumn(
+        "tile", F.col("_trow") * n_lon + F.col("_tcol")
+    ).drop("_tcol", "_trow")
+
+
+def explode_disc_tiles(
+    df: DataFrame, lon_col: str, lat_col: str, radius_deg: float,
+) -> DataFrame:
+    """One row per tile that a point's radius disc can touch, by
+    arithmetic alone: the tile rows of [lat−r, lat+r] (cut to the
+    globe) × the tile columns of [lon−s, lon+s] with
+    explode_neighbor_bins' adaptive halo s = r/cos(|lat|+r), the whole
+    ring where the disc reaches a pole, and modular wraparound. Every
+    position within ``radius_deg`` of arc of the point lies in one of
+    them (the longitude offset of such a position is at most
+    asin(sin r / cos lat) ≤ s); a tiny pad keeps rounding at a tile edge
+    from losing a row."""
+    width, n_lon, n_lat = tile_layout(radius_deg)
+    pad = 1e-9 * max(radius_deg, 1.0)
+    r = radius_deg + pad
+    lat, lon = F.col(lat_col), F.col(lon_col)
+    reach = F.abs(lat) + F.lit(r)
+
+    def row(x, off):  # tile row of latitude x + off, on the globe
+        t = F.floor((x + F.lit(off + 90.0)) / width).cast("int")
+        return F.greatest(F.least(t, F.lit(n_lat - 1)), F.lit(0))
+
+    def col(x):  # unwrapped tile column of longitude x
+        return F.floor((x + F.lit(180.0)) / width).cast("int")
+
+    span = F.col("_span")
+    west = col(lon - span)
+    # at most one lap of the ring: a wider run would emit a tile twice
+    east = F.least(col(lon + span), west + F.lit(n_lon - 1))
+    return (
+        df.withColumn("_span", F.when(
+            reach < 90.0, F.lit(r) / F.cos(F.radians(reach))
+        ).otherwise(360.0))
+        .withColumn("_trow", F.explode(F.sequence(row(lat, -r), row(lat, r))))
+        .withColumn("_tcol", F.explode(F.sequence(west, east)))
+        .withColumn("tile", F.col("_trow") * n_lon + F.pmod(F.col("_tcol"), F.lit(n_lon)))
+        .drop("_span", "_trow", "_tcol")
     )
 
 

@@ -2594,10 +2594,10 @@ from .atlas_oracle import (  # noqa: F401  (re-exported: __spark_entry__, tests)
 def q_argo_atlas_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference-parity pipeline end-to-end (SURVEY §3.1-3.3): synthetic
     raw profiles → summary gates → applyInArrow interpolation onto 64
-    levels → materialized parquet intermediate → binned neighborhood
-    join → kernel-weighted TS climatology (A1-A3) → one-pass R14 EAPE
-    (A4: per cell, mean profile → isopycnal displacement → weighted
-    mean in one cell-run kernel; reference atlas.py:152-191, 281-298).
+    levels → materialized parquet intermediate → one tile exchange
+    whose kernel computes, per cell, the kernel-weighted TS climatology
+    (A1-A3) and then both EAPE algorithms against the cell's mean
+    profile (A4; reference atlas.py:152-191, 281-298).
 
     The interpolated profiles are written to a parquet temp-path and
     read back, so the DuckDB oracle (atlas_oracle.py) brute-forces the
@@ -2608,7 +2608,7 @@ def q_argo_atlas_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     the local cell-mean curve) and T25 (eape_t25_l10, displacement
     against the global Lorenz profile via the gammat bisection —
     reference atlas.py:194-231)."""
-    from .operators.atlas import clim_eape, clim_ts, make_grid, match_pairs
+    from .operators.atlas import atlas_points, clim_atlas, make_grid
     from .operators.interpolation import interpolate_profiles
     from .sources.synthetic import make_raw
 
@@ -2651,29 +2651,10 @@ def q_argo_atlas_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
          float(bounds.la_s), float(bounds.la_s) + 2.0 * nlat),
         reso_deg=2.0,
     )
-    # the pair set feeds the TS call and both EAPE calls (SURVEY
-    # §7.4.2) — materialize it so each reuses, not recomputes, the
-    # neighborhood join. localCheckpoint (not persist): a query builder
-    # cannot unpersist after its caller collects, and CacheManager pins
-    # persisted relations for the session — checkpointed RDDs are freed
-    # by the ContextCleaner once unreferenced (round-5 review). Each
-    # EAPE call derives its cell means in its own one-pass kernel.
-    pairs = match_pairs(grid, profiles, reso_deg=2.0, smoothing_factor=4.0
-                        ).localCheckpoint(eager=True)
-    ts = clim_ts(grid, profiles, reso_deg=2.0, smoothing_factor=4.0, pairs=pairs)
-    eape = clim_eape(
-        grid, profiles, reso_deg=2.0, smoothing_factor=4.0, pairs=pairs
-    )
-    eape_t25 = clim_eape(
-        grid, profiles, reso_deg=2.0, smoothing_factor=4.0, pairs=pairs,
-        algo="T25",
-    )
-    out = (
-        ts.join(eape.select("glon", "glat", "EAPE"), on=["glon", "glat"])
-        .join(
-            eape_t25.select("glon", "glat", F.col("EAPE").alias("EAPE_T25")),
-            on=["glon", "glat"],
-        )
+    # one tile exchange computes TS and both EAPE algorithms per cell
+    out = clim_atlas(
+        grid, atlas_points(profiles), reso_deg=2.0, smoothing_factor=4.0,
+        eape={"EAPE": "R14", "EAPE_T25": "T25"},
     )
     return out.select(
         "glon", "glat",

@@ -9,24 +9,24 @@ a feedback edge Structured Streaming's dataflow model does not express.
 
 The documented remedy is the batch-refresh trigger implemented here:
 
-- INCREMENTAL pair generation: each micro-batch of newly interpolated
-  profiles joins the (static) grid via the binned neighborhood join —
-  only the new profiles are matched, never the backlog. The pair rows
-  land in a parquet pair store, partitioned by micro-batch id so a
-  replayed batch OVERWRITES its own partition instead of duplicating it
-  (foreachBatch's at-least-once contract made idempotent).
-- PERIODIC full pass 1+2 over the accumulated pair store: the same
-  clim_ts / clim_eape operators the batch pipeline uses (both passes
-  consume the pair set, so nothing upstream recomputes), refreshing the
-  atlas output in place.
+- a POINT store: each micro-batch's quality-gated profiles (the
+  lon/lat/CT/SR/IDX rows of operators.atlas.atlas_points — one row per
+  profile, not one per (cell, profile) pair) land in a parquet store,
+  partitioned by micro-batch id so a replayed batch OVERWRITES its own
+  partition instead of duplicating it (foreachBatch's at-least-once
+  contract made idempotent).
+- PERIODIC rebuild over the accumulated store: one call of the batch
+  pipeline's tile kernel (operators.atlas.clim_atlas), which computes
+  the cell means and the EAPE against them in one exchange, refreshing
+  the atlas output.
 
-Cost model at scale: the incremental part (pair join) is O(new
-profiles) per trigger; the refresh is O(total pairs) but runs every
-``refresh_every`` batches on the operator's schedule — exactly the
-reference's full-rebuild economics (atlas.py:379-383) amortized, with
-Spark doing the distribution. The pair store doubles as the
-checkpointable state; deleting the atlas output is always safe (next
-refresh rebuilds it).
+Cost model at scale: the incremental part is O(new profiles) per
+trigger and does no spatial work; the refresh is O(total profiles)
+but runs every ``refresh_every`` batches on the operator's schedule —
+exactly the reference's full-rebuild economics (atlas.py:379-383)
+amortized, with Spark doing the distribution. The point store doubles
+as the checkpointable state; deleting the atlas output is always safe
+(next refresh rebuilds it).
 
 Atlas publication is ATOMIC for concurrent readers: each refresh
 writes a fresh ``{atlas_store}/v=<batch_id>`` directory and then
@@ -41,14 +41,14 @@ mount), ``scheme://`` URIs use the Hadoop FileSystem API —
 FileContext.rename(OVERWRITE), atomic on HDFS, last-writer-wins on
 object stores (see fsio's per-filesystem atomicity contract; true
 transactional publish on s3a/gs belongs in a table format). The
-pair-store appends are replay-safe via the per-batch partition.
+point-store appends are replay-safe via the per-batch partition.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.atlas import clim_eape, clim_ts, match_pairs
+from ..operators.atlas import atlas_points, clim_atlas
 from .fsio import read_pointer, store_fs
 
 __all__ = ["atlas_refresh_writer", "current_atlas", "publish_version"]
@@ -102,7 +102,7 @@ def current_atlas(spark: SparkSession, atlas_store: str) -> DataFrame:
 
 def atlas_refresh_writer(
     grid: DataFrame,
-    pair_store: str,
+    point_store: str,
     atlas_store: str,
     reso_deg: float,
     smoothing_factor: float = 4.0,
@@ -110,17 +110,18 @@ def atlas_refresh_writer(
     algo: str = "R14",
     delayed_only: bool = True,
 ):
-    """Build the foreachBatch callable: incremental pair append +
-    periodic two-pass atlas rebuild. Wire it with::
+    """Build the foreachBatch callable: incremental point append +
+    periodic atlas rebuild (CT/SR/W, RHO and ``algo``'s EAPE per cell).
+    Wire it with::
 
         profiles_stream.writeStream.foreachBatch(
-            atlas_refresh_writer(grid, pair_dir, atlas_dir, 2.0)
+            atlas_refresh_writer(grid, point_dir, atlas_dir, 2.0)
         ).option("checkpointLocation", ckpt).start()
 
     ``refresh_every=N`` refreshes on every Nth micro-batch (the final
     state after a stream drains is identical for any N that divides the
-    last batch in — the pair store always holds every pair appended so
-    far, so each refresh is a full, self-contained rebuild).
+    last batch in — the point store always holds every profile appended
+    so far, so each refresh is a full, self-contained rebuild).
     """
     if refresh_every < 1:
         raise ValueError(f"refresh_every must be >= 1, got {refresh_every}")
@@ -128,37 +129,26 @@ def atlas_refresh_writer(
     # for the stream's lifetime is non-recomputable — losing one
     # executor (preemption, OOM kill) would invalidate the truncated
     # lineage and fail every later micro-batch. A cached grid re-derives
-    # evicted blocks from its (deterministic) plan; the per-batch
-    # localCheckpoints inside refresh() are safe because each trigger
-    # rebuilds them from scratch.
+    # evicted blocks from its (deterministic) plan.
     grid = grid.cache()
     grid.count()  # materialize once up front
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        new_pairs = match_pairs(
-            grid, batch_df, reso_deg, smoothing_factor, delayed_only=delayed_only
-        )
+        new_points = atlas_points(batch_df, delayed_only)
         # idempotent under foreachBatch replay: the batch owns its
         # partition directory and overwrites it wholesale
-        new_pairs.write.mode("overwrite").parquet(f"{pair_store}/batch={batch_id}")
+        new_points.write.mode("overwrite").parquet(f"{point_store}/batch={batch_id}")
         if batch_id % refresh_every != 0:
             return
-        # explicit schema: when every batch so far produced zero pairs
-        # the store holds only _SUCCESS markers and schema inference
-        # would raise inside foreachBatch, killing the stream — an empty
-        # frame with the pair schema rebuilds an empty atlas instead
-        pairs = (
-            spark.read.schema(new_pairs.schema)
-            .parquet(f"{pair_store}/batch=*")
-            .localCheckpoint(eager=True)
-        )
-        ts = clim_ts(grid, None, reso_deg, smoothing_factor, pairs=pairs)
-        eape = clim_eape(
-            grid, None, reso_deg, smoothing_factor, pairs=pairs, algo=algo
-        )
-        out = ts.join(
-            eape.select("glon", "glat", "RHO", "EAPE"), on=["glon", "glat"]
+        # explicit schema: when every batch so far had no qualifying
+        # profile the store holds only _SUCCESS markers and schema
+        # inference would raise inside foreachBatch, killing the stream
+        # — an empty frame with the point schema rebuilds an empty
+        # atlas instead
+        points = spark.read.schema(new_points.schema).parquet(f"{point_store}/batch=*")
+        out = clim_atlas(
+            grid, points, reso_deg, smoothing_factor, eape={"EAPE": algo}
         )
         # versioned write + atomic pointer swap: replayed batches
         # overwrite their own v= directory (idempotent), readers via

@@ -187,7 +187,7 @@ def main() -> None:
         except Exception as exc:  # one broken query = one missing row
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
         # Isolate queries from each other's storage debris:
-        # localCheckpointed RDDs (LSH edge lists, atlas pair sets) are
+        # localCheckpointed RDDs (e.g. LSH edge lists) are
         # reclaimed only when the DRIVER GCs their handles and the
         # ContextCleaner runs — without this, blocks from an earlier
         # query tax a later one's executor memory and a min-of-3 can
@@ -203,12 +203,7 @@ def main() -> None:
     # Reference-parity microbench: interpolation throughput (BASELINE.md
     # derived rate ~5e3 profiles/s on 28 cores). Python workers are warm
     # from the headline queries, matching the reference's steady state.
-    from argostats_spark.operators.atlas import (
-        choose_clim_ts_variant,
-        clim_eape,
-        clim_ts_auto,
-        make_grid,
-    )
+    from argostats_spark.operators.atlas import clim_eape, clim_ts, make_grid
     from argostats_spark.operators.interpolation import interpolate_profiles
     from argostats_spark.operators.summary import build_summary
     from argostats_spark.sources.synthetic import make_raw
@@ -255,26 +250,16 @@ def main() -> None:
 
         profiles = interpolate_profiles(raw).cache()
         profiles.count()
-        # warm the cell-kernel worker pool on a small domain before timing;
-        # the warmup also goes through the auto-router so its two-count
-        # estimate is codegen-warm before the measured run
-        _noop(clim_ts_auto(
+        # warm the tile-kernel worker pool on a small domain before timing
+        _noop(clim_ts(
             make_grid(spark, (0.0, 20.0, -20.0, 0.0), reso_deg=5.0),
             profiles, reso_deg=5.0, smoothing_factor=2.0,
         ))
-        # measured run goes through the variant router (clim_ts_auto), the
-        # same entry a user calls; record which physical variant it picked
-        # so the artifact shows the routing decision, not just the time
         grid = make_grid(spark, (-180.0, 180.0, -80.0, 80.0), reso_deg=5.0)
-        atlas_variant = choose_clim_ts_variant(
-            grid, profiles, reso_deg=5.0, smoothing_factor=2.0
-        )
-        argo["atlas_variant"] = atlas_variant
         timings["argo_atlas_global_5deg"] = round(
             _min_of_3(
-                lambda: _noop(clim_ts_auto(
+                lambda: _noop(clim_ts(
                     grid, profiles, reso_deg=5.0, smoothing_factor=2.0,
-                    variant=atlas_variant,
                 )),
                 warm=False,
             ),
@@ -284,10 +269,9 @@ def main() -> None:
         # EAPE (VERDICT r8 item 3): the reference's costliest
         # computation (reference atlas.py:439-448). Regional 5 deg box
         # (100x70 deg, 280 cells), R14 kernel, same profiles/smoothing as
-        # the atlas row so the numbers are comparable; pairs recomputed
-        # inside each run — the measured time IS the full EAPE dataflow
-        # (pair exchange, then one kernel per cell: mean profile,
-        # per-pair displacement, weighted mean).
+        # the atlas row so the numbers are comparable — the measured time
+        # IS the full EAPE dataflow (one tile exchange, then per tile:
+        # cell mean profiles, per-pair displacement, weighted mean).
         egrid = make_grid(spark, (-80.0, 20.0, -60.0, 10.0), reso_deg=5.0)
         eape_sec = _min_of_3(lambda: _noop(clim_eape(
             egrid, profiles, reso_deg=5.0, smoothing_factor=2.0
@@ -301,7 +285,7 @@ def main() -> None:
         )
         # T25 variant (same dataflow, gammat-bisection kernel — the
         # Tailleux-2025 displacement against the global Lorenz
-        # profile): its per-pair cost is the bisection, so a kernel
+        # profile): its per-profile cost is the bisection, so a kernel
         # change shows here even when R14 is flat
         t25_sec = _min_of_3(lambda: _noop(clim_eape(
             egrid, profiles, reso_deg=5.0, smoothing_factor=2.0, algo="T25",

@@ -50,12 +50,7 @@ def explain_formatted(df) -> str:
 def build_argo_frames(spark) -> dict:
     """The exact dataflows bench.py times for the argo rows (same
     params; the synthetic input is deterministic)."""
-    from argostats_spark.operators.atlas import (
-        choose_clim_ts_variant,
-        clim_eape,
-        clim_ts_auto,
-        make_grid,
-    )
+    from argostats_spark.operators.atlas import clim_eape, clim_ts, make_grid
     from argostats_spark.operators.interpolation import interpolate_profiles
     from argostats_spark.operators.summary import build_summary
     from argostats_spark.sources.synthetic import make_raw
@@ -65,16 +60,12 @@ def build_argo_frames(spark) -> dict:
     profiles = interpolate_profiles(raw).cache()
     profiles.count()
     grid = make_grid(spark, (-180.0, 180.0, -80.0, 80.0), reso_deg=5.0)
-    variant = choose_clim_ts_variant(
-        grid, profiles, reso_deg=5.0, smoothing_factor=2.0
-    )
     egrid = make_grid(spark, (-80.0, 20.0, -60.0, 10.0), reso_deg=5.0)
     return {
         "argo_summary_build_30k": lambda: build_summary(raw),
         "argo_interp_30k_profiles": lambda: interpolate_profiles(raw),
-        "argo_atlas_global_5deg": lambda: clim_ts_auto(
-            grid, profiles, reso_deg=5.0, smoothing_factor=2.0,
-            variant=variant,
+        "argo_atlas_global_5deg": lambda: clim_ts(
+            grid, profiles, reso_deg=5.0, smoothing_factor=2.0
         ),
         "argo_eape_regional_5deg": lambda: clim_eape(
             egrid, profiles, reso_deg=5.0, smoothing_factor=2.0, algo="R14"

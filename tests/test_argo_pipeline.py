@@ -301,7 +301,7 @@ def test_eape_two_pass_runs_and_zero_for_uniform(spark):
 
 
 def test_e2e_pipeline_on_synthetic(spark, profiles):
-    """Full chain on synthetic data: profiles → pairs → TS atlas over the
+    """Full chain on synthetic data: profiles → tiles → TS atlas over the
     profiles' own bounding box; cells with support must have plausible
     means where weights are positive."""
     pdf = profiles.select("LONGITUDE", "LATITUDE").toPandas()
@@ -312,8 +312,7 @@ def test_e2e_pipeline_on_synthetic(spark, profiles):
         (float(lon0), float(lon0) + 10, float(lat0), float(lat0) + 10),
         reso_deg=2.0,
     )
-    pairs = match_pairs(grid, profiles, reso_deg=2.0).cache()
-    ts = clim_ts(grid, profiles, reso_deg=2.0, pairs=pairs).toPandas()
+    ts = clim_ts(grid, profiles, reso_deg=2.0).toPandas()
     if len(ts):
         ct = np.stack(ts.CT.to_numpy())
         w = np.stack(ts.W.to_numpy())
@@ -364,13 +363,15 @@ def test_clim_ts_exploded_matches_arrow_kernel(spark, profiles):
 
 
 def test_clim_ts_auto_variant_selection(spark, profiles):
-    """clim_ts_auto routes on the estimated pair-shuffle size: a
-    polar-band input under a fine global grid (huge adaptive lon halos
-    → many cells per profile) exceeds a budget that the same profile
-    count in a regional mid-latitude box stays under — and both routes
-    return the same answers as the forced variants."""
+    """No pair-shuffle budget routes the atlas any more: the tile kernel
+    ships each profile a bounded number of times whatever the grid, so
+    choose_clim_ts_variant answers 'kernel' without a job even for a
+    polar-band input under a fine global grid (huge adaptive lon halos,
+    many cells per profile), clim_ts_auto is clim_ts unless a variant
+    is forced, and an unknown variant is refused. estimate_pair_count
+    stays an upper bound on the true (post-cutoff) pair set."""
     from argostats_spark.operators.atlas import (
-        clim_ts_auto, estimate_pair_count, match_pairs,
+        choose_clim_ts_variant, clim_ts_auto, estimate_pair_count, match_pairs,
     )
 
     pdf = profiles.select("LONGITUDE", "LATITUDE").toPandas()
@@ -380,34 +381,25 @@ def test_clim_ts_auto_variant_selection(spark, profiles):
     global_grid = make_grid(spark, (-180.0, 180.0, -85.0, 86.0), reso_deg=1.0)
 
     est_regional = estimate_pair_count(regional_grid, profiles, reso_deg=2.0)
-    est_polar = estimate_pair_count(global_grid, polar, reso_deg=1.0)
-    # estimator sanity: an upper bound on the true (post-cutoff) pairs
     actual = match_pairs(regional_grid, profiles, reso_deg=2.0).count()
     assert est_regional >= actual
-    # polar skew fans out far harder per profile
-    assert est_polar > 4 * est_regional
 
-    # pick a budget between the two estimates: routing must diverge
-    from argostats_spark.operators.atlas import (
-        PAIR_SHUFFLE_BYTES, choose_clim_ts_variant,
+    for grid, prof, reso in ((regional_grid, profiles, 2.0), (global_grid, polar, 1.0)):
+        assert _jobs(spark, lambda: choose_clim_ts_variant(grid, prof, reso)) == 0
+        assert choose_clim_ts_variant(grid, prof, reso) == "kernel"
+    with pytest.raises(ValueError, match="unknown clim_ts variant"):
+        clim_ts_auto(regional_grid, profiles, reso_deg=2.0, variant="budget")
+
+    def frame(df):
+        return df.orderBy("glon", "glat").toPandas()
+
+    want = frame(clim_ts(global_grid, polar, reso_deg=1.0))
+    assert len(want) > 0
+    pd.testing.assert_frame_equal(
+        frame(clim_ts_auto(global_grid, polar, reso_deg=1.0)), want, check_exact=True
     )
-    budget_gb = (est_regional + est_polar) / 2 * PAIR_SHUFFLE_BYTES / 1e9
-    assert choose_clim_ts_variant(
-        regional_grid, profiles, 2.0, max_pair_shuffle_gb=budget_gb
-    ) == "kernel"
-    assert choose_clim_ts_variant(
-        global_grid, polar, 1.0, max_pair_shuffle_gb=budget_gb
-    ) == "exploded"
-    # and auto == forced on the same input
-    a = clim_ts_auto(
-        regional_grid, profiles, reso_deg=2.0, max_pair_shuffle_gb=budget_gb
-    )
-    auto = a.toPandas().sort_values(["glon", "glat"]).reset_index(drop=True)
-    forced = (
-        clim_ts_auto(regional_grid, profiles, reso_deg=2.0, variant="kernel")
-        .toPandas().sort_values(["glon", "glat"]).reset_index(drop=True)
-    )
-    assert len(auto) == len(forced) and (auto.n_points == forced.n_points).all()
+    exploded = frame(clim_ts_auto(global_grid, polar, reso_deg=1.0, variant="exploded"))
+    assert exploded.n_points.tolist() == want.n_points.tolist()
 
 
 def test_netcdf_export_roundtrip(spark, tmp_path):
@@ -767,7 +759,7 @@ def _two_pass_eape(pairs, ts, theta: float, algo: str):
     import pyarrow as pa
 
     from argostats_spark.functions.teos10 import eape_unit, rho
-    from argostats_spark.operators.atlas import _EAPE_SCHEMA, _eape_integrand
+    from argostats_spark.operators.atlas import _eape_integrand, _schema
 
     pref = pref64().astype("f8")
     unit = eape_unit()
@@ -812,17 +804,19 @@ def _two_pass_eape(pairs, ts, theta: float, algo: str):
         pairs.select("glon", "glat", "hav", "CT", "SR", "IDX")
         .repartition(n, "glon", "glat")
         .join(F.broadcast(means), on=["glon", "glat"])
-        .groupBy("glon", "glat").applyInArrow(kernel, _EAPE_SCHEMA)
+        .groupBy("glon", "glat").applyInArrow(kernel, _schema("RHO", "EAPE"))
     )
 
 
 def test_eape_one_pass_equals_two_pass_composition(spark, profiles):
-    """clim_eape derives each cell's mean profile inside its own group
-    kernel (rounded through f4, as clim_ts stores it). Its rows must
-    equal the two-pass composition — clim_ts means, then the per-pair
-    integrand against them — EXACTLY, for R14 and T25, with the cached
-    pair set passed in and with the pair set built inside clim_eape
-    (for T25 that is the per-profile feature path)."""
+    """clim_eape derives each cell's mean profile inside the tile kernel
+    (rounded through f4, as clim_ts stores it). Its rows must equal the
+    two-pass composition — clim_ts means joined back onto the
+    independent binned pair set (match_pairs), then the per-pair
+    integrand against them — for R14 and T25: the same cells, n_points
+    and RHO exactly, and the same EAPE up to the f8 summation order,
+    which differs between the tile kernel's matrix products and the
+    pair-run sums."""
     import math
 
     b = profiles.filter(
@@ -836,30 +830,37 @@ def test_eape_one_pass_equals_two_pass_composition(spark, profiles):
     )
     theta = math.sin(math.radians(2.0 * 5.0) / 2.0) ** 2
     pairs = match_pairs(grid, profiles, 5.0, 2.0).localCheckpoint(eager=True)
-    ts = clim_ts(grid, profiles, 5.0, 2.0, pairs=pairs).localCheckpoint(eager=True)
+    ts = clim_ts(grid, profiles, 5.0, 2.0).localCheckpoint(eager=True)
     for algo in ("R14", "T25"):
         want = _two_pass_eape(pairs, ts, theta, algo).orderBy("glon", "glat").toPandas()
+        got = clim_eape(grid, profiles, 5.0, 2.0, algo=algo).orderBy("glon", "glat").toPandas()
         assert len(want) > 0
-        for got in (clim_eape(grid, profiles, 5.0, 2.0, pairs=pairs, algo=algo),
-                    clim_eape(grid, profiles, 5.0, 2.0, algo=algo)):
-            got = got.orderBy("glon", "glat").toPandas()
-            pd.testing.assert_frame_equal(got, want, check_exact=True)
+        pd.testing.assert_frame_equal(
+            got[["glon", "glat", "n_points", "RHO"]],
+            want[["glon", "glat", "n_points", "RHO"]],
+            check_exact=True,
+        )
+        np.testing.assert_allclose(
+            np.stack(got.EAPE.to_numpy()), np.stack(want.EAPE.to_numpy()),
+            rtol=1e-6, atol=1e-7, err_msg=algo,
+        )
 
 
 def test_cell_runs_do_not_depend_on_batch_cuts_or_partitions(spark, profiles, monkeypatch):
-    """clim_ts and clim_eape walk the sorted cell runs of each Arrow
-    batch and hold back a run that continues into the next batch. Their
-    rows must not depend on where the batches cut the runs (5 rows a
-    batch, so most cells span several) or on how many partitions share
-    the cells (the pair repartition at 1 partition instead of
-    defaultParallelism): exactly the default run's rows, for clim_ts
-    and clim_eape R14, T25 and cached ``pairs=``. The one-cell grid's
-    cell spans more than 3 batches."""
+    """clim_ts and clim_eape walk the sorted tile runs of each Arrow
+    batch, hold back a run that continues into the next batch, and sum
+    each tile's profiles in content order. Their rows must be
+    bit-identical to the default run's when the batches cut the runs (5
+    rows a batch, so most tiles span several), when one partition holds
+    every tile (the tile repartition at 1 partition instead of
+    defaultParallelism), and when the input profiles arrive
+    pre-shuffled (repartition(7)): for clim_ts and clim_eape R14 and
+    T25. The one-cell grid's tile spans more than 3 batches."""
     import re
 
     from pyspark import SparkContext
 
-    # a 40° kernel radius, so cells hold many pairs of the small fixture
+    # a 40° kernel radius, so cells hold many profiles of the small fixture
     reso, sm = 10.0, 4.0
     world = make_grid(spark, (-180.0, 180.0, -80.0, 80.0), reso)
     big = clim_ts(world, profiles, reso, sm).orderBy(F.desc("n_points")).first()
@@ -871,123 +872,103 @@ def test_cell_runs_do_not_depend_on_batch_cuts_or_partitions(spark, profiles, mo
         ),
     }
 
-    def results():
+    def results(prof):
         out = {}
         for name, grid in grids.items():
-            pairs = match_pairs(grid, profiles, reso, sm).localCheckpoint(eager=True)
             dfs = {
-                "ts": clim_ts(grid, profiles, reso, sm),
-                "r14": clim_eape(grid, profiles, reso, sm, algo="R14"),
-                "t25": clim_eape(grid, profiles, reso, sm, algo="T25"),
-                "r14_pairs": clim_eape(grid, profiles, reso, sm, pairs=pairs, algo="R14"),
-                "t25_pairs": clim_eape(grid, profiles, reso, sm, pairs=pairs, algo="T25"),
+                "ts": clim_ts(grid, prof, reso, sm),
+                "r14": clim_eape(grid, prof, reso, sm, algo="R14"),
+                "t25": clim_eape(grid, prof, reso, sm, algo="T25"),
             }
             for key, df in dfs.items():
-                # the cell exchange, above the cached profiles' lineage:
-                # hashpartitioning(glon, glat, n), or SinglePartition at n=1
+                # the tile exchange, above the cached profiles' lineage:
+                # hashpartitioning(tile, n), or SinglePartition at n=1
                 plan = df._jdf.queryExecution().executedPlan().toString()
                 plan = plan.partition("InMemoryRelation")[0]
                 exch = re.findall(r"Exchange (\w+).*REPARTITION_BY_NUM", plan)
                 out[name, key] = (exch, df.orderBy("glon", "glat").toPandas())
         return out
 
-    want = results()
+    want = results(profiles)
     assert want["one", "ts"][1].n_points.tolist() == [big.n_points]
+    shuffled = results(profiles.repartition(7))
     conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     spark.conf.set(conf, "5")
     try:
-        cut = results()
+        cut = results(profiles)
     finally:
         spark.conf.unset(conf)
     monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda self: 1))
-    single = results()
+    single = results(profiles)
     for k, (exch, frame) in want.items():
         assert len(frame) > 0, k
         assert exch == ["hashpartitioning"], (k, exch)
         assert single[k][0] == ["SinglePartition"], (k, single[k][0])
-        pd.testing.assert_frame_equal(cut[k][1], frame, check_exact=True)
-        pd.testing.assert_frame_equal(single[k][1], frame, check_exact=True)
+        for other in (cut, single, shuffled):
+            pd.testing.assert_frame_equal(other[k][1], frame, check_exact=True)
 
 
-def test_eape_fast_path_equals_legacy_pairs_path(spark, profiles):
-    """Round 14: clim_eape with pairs=None routes through
-    _eape_profile_features (the per-PROFILE density/bisection pass —
-    a profile near k cells otherwise pays that work k times inside the
-    per-cell kernel). The integrand values are elementwise f8,
-    bitwise-identical to the in-kernel path, so the weighted means
-    must agree to float precision; n_points (the pair multiplicity)
-    must agree EXACTLY — a fast path that changed the pair set would
-    be a different query, not an optimization."""
-    import numpy as np
+def test_one_atlas_call_equals_separate_calls(spark, profiles):
+    """clim_atlas returns TS and any set of EAPE algorithms from one
+    tile exchange (the pipeline asks for R14 and T25 at once). Each
+    column must be bit-identical to the separate clim_ts and clim_eape
+    calls: the tile kernel computes every output of a cell from the same
+    tile run, whatever else it is asked for."""
+    from argostats_spark.operators.atlas import atlas_points, clim_atlas
 
-    from argostats_spark.operators.atlas import (
-        clim_eape,
-        clim_ts,
-        make_grid,
-        match_pairs,
+    grid = make_grid(spark, (-180.0, 180.0, -60.0, 64.0), reso_deg=10.0)
+
+    def frame(df):
+        return df.orderBy("glon", "glat").toPandas()
+
+    both = frame(clim_atlas(
+        grid, atlas_points(profiles), 10.0, 2.0, eape={"E14": "R14", "E25": "T25"}
+    ))
+    assert len(both) > 0
+    keys = ["glon", "glat", "n_points"]
+    pd.testing.assert_frame_equal(
+        both[keys + ["CT", "SR", "W"]], frame(clim_ts(grid, profiles, 10.0, 2.0)),
+        check_exact=True,
     )
-
-    b = profiles.filter(
-        (F.col("FLAG") == 1) & (F.col("DATA_MODE") == 1)
-    ).agg(
-        F.floor(F.min("LONGITUDE")).alias("w"), F.ceil(F.max("LONGITUDE")).alias("e"),
-        F.floor(F.min("LATITUDE")).alias("s"), F.ceil(F.max("LATITUDE")).alias("n"),
-    ).first()
-    grid = make_grid(
-        spark, (float(b.w), float(b.e) + 2, float(b.s), float(b.n) + 2), reso_deg=5.0
-    )
-    pairs = match_pairs(grid, profiles, 5.0, 2.0).localCheckpoint(eager=True)
-    ts = clim_ts(grid, profiles, 5.0, 2.0, pairs=pairs).localCheckpoint(eager=True)
-    for algo in ("R14", "T25"):
-        legacy = clim_eape(grid, profiles, 5.0, 2.0, pairs=pairs,
-                           algo=algo).orderBy("glon", "glat").toPandas()
-        fast = clim_eape(grid, profiles, 5.0, 2.0,
-                         algo=algo).orderBy("glon", "glat").toPandas()
-        assert len(legacy) == len(fast) > 0
-        assert (legacy.n_points.to_numpy() == fast.n_points.to_numpy()).all()
-        for col in ("RHO", "EAPE"):
-            lv = np.stack(legacy[col].to_numpy())
-            fv = np.stack(fast[col].to_numpy())
-            # same f8 integrand values; only the in-group summation
-            # order can differ between the two plans — f4 output
-            # absorbs it in practice (exact on the test fixture)
-            np.testing.assert_allclose(fv, lv, rtol=1e-6, atol=1e-7)
+    for col, algo in (("E14", "R14"), ("E25", "T25")):
+        one = frame(clim_eape(grid, profiles, 10.0, 2.0, algo=algo))
+        pd.testing.assert_frame_equal(
+            both[keys + ["RHO", col]].rename(columns={col: "EAPE"}), one,
+            check_exact=True,
+        )
 
 
 def test_eape_fast_path_plan_exchange_excludes_bar_arrays(spark, profiles):
-    """Plan pin of the one-pass EAPE: ONE exchange, hash-partitioned by
-    (glon, glat), straight under ONE MapInArrow cell-run kernel (only a
-    sort between them) — no FlatMapGroupsInArrow, no join between them
-    (the cell means are computed in the kernel, not joined back), no
-    *_BAR column anywhere, and the exchange ships only what the kernel
-    reads (no lon/lat join coordinates). R14 ships the per-pair CT/SR;
-    T25 ships the per-profile EI plus CT/SR for the cell means (its
-    feature pass is a second MapInArrow, below the exchange)."""
+    """Plan pin of the one-pass atlas, for clim_ts and clim_eape R14 and
+    T25: ONE exchange, hash-partitioned by tile, straight under ONE
+    MapInArrow tile kernel (only a sort between them) — no broadcast,
+    no join, no FlatMapGroupsInArrow, no *_BAR column anywhere (the cell
+    means are computed in the kernel, not joined back), and the
+    exchange ships only what the kernel reads: the tile, the cells'
+    glon/glat and the profiles' lon/lat and level arrays."""
+    import re
+
     from argostats_spark.operators.atlas import clim_eape, make_grid
 
     grid = make_grid(spark, (-180.0, 180.0, -60.0, 64.0), reso_deg=10.0)
-    for algo, cols in (("R14", (" CT#", " SR#")), ("T25", (" CT#", " SR#", " EI#"))):
-        df = clim_eape(grid, profiles, 10.0, 2.0, algo=algo)
+    for df in (clim_ts(grid, profiles, 10.0, 2.0),
+               clim_eape(grid, profiles, 10.0, 2.0, algo="R14"),
+               clim_eape(grid, profiles, 10.0, 2.0, algo="T25")):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "_BAR" not in plan, plan[:2000]
         # the cached profiles print their own lineage (the interpolation
-        # kernel) inside InMemoryRelation; the EAPE plan is the prefix
+        # kernel) inside InMemoryRelation; the atlas plan is the prefix
         plan = plan.partition("InMemoryRelation")[0]
-        assert "FlatMapGroupsInArrow" not in plan, plan[:2000]
-        assert plan.count("Exchange hashpartitioning(glon") == 1, plan[:2000]
-        kernel_pos = plan.index("MapInArrow")
-        exch_pos = plan.index("Exchange hashpartitioning(glon")
-        assert kernel_pos < exch_pos
-        assert plan[:exch_pos].count("MapInArrow") == 1, plan[:2000]
-        assert "Join" not in plan[kernel_pos:exch_pos], plan[:2000]
-        exch_line = next(
-            line for line in plan.splitlines()
-            if "Exchange hashpartitioning(glon" in line
-        )
-        under = plan[plan.index(exch_line):].splitlines()[1]
-        for col in cols:
-            assert col in under, under
-        assert " lon#" not in under, under
+        for op in ("FlatMapGroupsInArrow", "Broadcast", "Join"):
+            assert op not in plan, (op, plan[:2000])
+        assert plan.count("Exchange hashpartitioning(tile") == 1, plan[:2000]
+        assert plan.count("Exchange") == 1, plan[:2000]
+        assert plan.count("MapInArrow") == 1, plan[:2000]
+        assert plan.index("MapInArrow") < plan.index("Exchange hashpartitioning(tile")
+        shipped = re.search(r"MapInArrow \w+\(([^)]*)\)", plan).group(1)
+        assert [a.split("#")[0] for a in shipped.split(", ")] == [
+            "glon", "glat", "tile", "lon", "lat", "CT", "SR", "IDX"
+        ], shipped
 
 
 def _jobs(spark, fn) -> int:
@@ -1012,10 +993,12 @@ def test_jobs_per_call_pinned(spark, tmp_path):
     time at small scale): build_summary 2 (the window's exchange and
     the result — no platform dim broadcast), estimate_pair_count 1
     (one tagged union in one partition, counted per bin and summed in
-    the same stage), clim_ts_auto and clim_eape 3 each (grid broadcast,
-    pair exchange, result — no grid cross join, no means pass or
-    join-back)."""
-    from argostats_spark.operators.atlas import clim_ts_auto, estimate_pair_count
+    the same stage), choose_clim_ts_variant 0 (no router), clim_ts_auto
+    and clim_eape 2 each (tile exchange and result — no grid broadcast,
+    no means pass or join-back)."""
+    from argostats_spark.operators.atlas import (
+        choose_clim_ts_variant, clim_ts_auto, estimate_pair_count,
+    )
 
     make_raw(spark, n_wmos=2, profiles_per_wmo=4, seed=3).write.parquet(str(tmp_path / "raw"))
     raw = spark.read.parquet(str(tmp_path / "raw"))
@@ -1031,12 +1014,14 @@ def test_jobs_per_call_pinned(spark, tmp_path):
     calls = {
         "build_summary": noop(build_summary(raw)),
         "estimate_pair_count": lambda: estimate_pair_count(grid, stored, 5.0, 2.0),
+        "choose_clim_ts_variant": lambda: choose_clim_ts_variant(grid, stored, 5.0, 2.0),
         "clim_ts_auto": noop(clim_ts_auto(grid, stored, 5.0, 2.0, variant="kernel")),
         "clim_eape": noop(clim_eape(grid, stored, 5.0, 2.0, algo="R14")),
     }
     got = {name: _jobs(spark, fn) for name, fn in calls.items()}
     assert got == {
-        "build_summary": 2, "estimate_pair_count": 1, "clim_ts_auto": 3, "clim_eape": 3,
+        "build_summary": 2, "estimate_pair_count": 1, "choose_clim_ts_variant": 0,
+        "clim_ts_auto": 2, "clim_eape": 2,
     }
 
 

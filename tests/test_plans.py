@@ -244,7 +244,6 @@ def test_registry_plans_free_of_antipatterns(spark, sf_dir):
         "ann_suite",             # sq8/mrl32 limbs: broadcast query set vs
                                  # corpus scan (the cosine_topk shape; r8)
         "ocean_mask_gate",       # broadcast scalar mask stats gate
-        "argo_atlas_pipeline",   # contains the kernel grid join above
         "quality_filter",        # broadcast 1-row percentile threshold
         "tfidf_lm_suite",        # broadcast 1-row LM smoothing totals
                                  # (T, V) onto the vocab table
@@ -269,37 +268,32 @@ def test_registry_plans_free_of_antipatterns(spark, sf_dir):
     assert not offenders, f"scale antipatterns compiled into: {offenders}"
 
 
-def test_eape_one_pass_reuses_cached_pairs(spark):
-    """SURVEY §7.4.2: clim_eape must consume the CACHED pair set (not
-    re-derive its lineage) and compute each cell's mean profile inside
-    its own cell-run kernel — no pass-1 means, no join-back. With the
-    pair set materialized the EAPE plan collapses to: one
-    InMemoryTableScan, ONE (glon, glat) exchange, ONE MapInArrow kernel
-    (no per-cell FlatMapGroupsInArrow), no join."""
-    from argostats_spark.operators.atlas import clim_eape, make_grid, match_pairs
+def test_atlas_plans_one_tile_exchange_no_broadcast(spark):
+    """The tile-halo atlas (clim_ts, clim_eape R14 and T25) is one
+    exchange hash-partitioned by tile, under ONE MapInArrow kernel (no
+    per-cell FlatMapGroupsInArrow): the grid cells and the profiles'
+    tile copies are computed by arithmetic and unioned, so there is no
+    BroadcastExchange, no BroadcastHashJoin and no join of any kind."""
+    from argostats_spark.operators.atlas import clim_eape, clim_ts, make_grid
     from argostats_spark.operators.interpolation import interpolate_profiles
     from argostats_spark.sources.synthetic import make_raw
 
     raw = make_raw(spark, n_wmos=4, profiles_per_wmo=5, seed=7)
     profiles = interpolate_profiles(raw)
     grid = make_grid(spark, (-180.0, 180.0, -60.0, 64.0), reso_deg=10.0)
-    pairs = match_pairs(grid, profiles, 10.0, 2.0).persist()
-    try:
-        pairs.count()  # materialize: lineage collapses
-        eape = clim_eape(grid, profiles, 10.0, 2.0, pairs=pairs)
-        plan = physical_plan(eape)
-        # plan text embeds the cached relation's ORIGINAL lineage inside
-        # its InMemoryRelation description; the EAPE skeleton is the
-        # prefix before it (kernel → exchange → cache scan)
-        pre, _, _ = plan.partition("InMemoryRelation")
-        assert pre.count("MapInArrow") == 1, pre           # ONLY the EAPE kernel
-        assert "FlatMapGroupsIn" not in pre, pre           # not one call per cell
-        assert pre.count("Exchange hashpartitioning(glon") == 1, pre
-        assert pre.count("InMemoryTableScan") == 1, pre    # cached pair set
-        assert "Join" not in pre, pre                      # no means join-back
-        assert "_BAR" not in plan, plan
-    finally:
-        pairs.unpersist()
+    for df in (clim_ts(grid, profiles, 10.0, 2.0),
+               clim_eape(grid, profiles, 10.0, 2.0, algo="R14"),
+               clim_eape(grid, profiles, 10.0, 2.0, algo="T25")):
+        plan = physical_plan(df)
+        # the interpolation below it has its own exchange and kernel:
+        # count the atlas part, above the interpolation's output
+        atlas = plan.split("FlatMapGroupsInArrow")[0]
+        for op in ("BroadcastExchange", "BroadcastHashJoin", "Join"):
+            assert op not in plan, (op, plan)
+        assert atlas.count("Exchange hashpartitioning(tile") == 1, atlas
+        assert atlas.count("Exchange") == 1, atlas
+        assert atlas.count("MapInArrow") == 1, atlas
+        assert "Union" in atlas, atlas
 
 
 def test_text_suite_is_pure_scan_project(spark, sf):

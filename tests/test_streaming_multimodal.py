@@ -1075,12 +1075,10 @@ def test_gdac_offset_compaction_replay_exactly_once(tmp_path):
 def test_streaming_atlas_refresh_equals_batch(spark, tmp_path):
     """The EAPE batch-refresh trigger (streaming/atlas.py — the SCALE.md
     "pass 2 does not stream" item): profiles arriving over several
-    micro-batches through the incremental pair join + periodic two-pass
-    rebuild must land on the SAME atlas as one batch run over all
-    profiles — per-cell n_points exact, CT/SR/W/RHO/EAPE arrays equal to
-    float tolerance (the kernel's f8 accumulation order differs with
-    batch arrival order; everything else is identical math over the
-    identical pair multiset)."""
+    micro-batches through the incremental point store + periodic
+    one-exchange rebuild must land on the SAME atlas as one batch run
+    over all profiles — bit for bit: the tile kernel sums each tile's
+    profiles in content order, so arrival order cannot change a bit."""
     from argostats_spark.operators.atlas import clim_eape, clim_ts, make_grid
     from argostats_spark.operators.interpolation import interpolate_profiles
     from argostats_spark.sources.synthetic import make_raw
@@ -1093,7 +1091,7 @@ def test_streaming_atlas_refresh_equals_batch(spark, tmp_path):
     schema = spark.read.parquet(prof_dir).schema
 
     grid = make_grid(spark, (-180.0, 180.0, -60.0, 64.0), reso_deg=10.0)
-    pair_dir = str(tmp_path / "pairs")
+    point_dir = str(tmp_path / "points")
     atlas_dir = str(tmp_path / "atlas")
     stream = (
         spark.readStream.schema(schema)
@@ -1102,7 +1100,7 @@ def test_streaming_atlas_refresh_equals_batch(spark, tmp_path):
     )
     q = (
         stream.writeStream.foreachBatch(
-            atlas_refresh_writer(grid, pair_dir, atlas_dir, 10.0, 2.0)
+            atlas_refresh_writer(grid, point_dir, atlas_dir, 10.0, 2.0)
         )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
@@ -1127,13 +1125,7 @@ def test_streaming_atlas_refresh_equals_batch(spark, tmp_path):
     )
 
     assert len(got) == len(want) > 0
-    assert (got.glon.to_numpy() == want.glon.to_numpy()).all()
-    assert (got.glat.to_numpy() == want.glat.to_numpy()).all()
-    assert (got.n_points.to_numpy() == want.n_points.to_numpy()).all()
-    for col in ("CT", "SR", "W", "RHO", "EAPE"):
-        a = np.stack(got[col].to_numpy())
-        b = np.stack(want[col].to_numpy())
-        np.testing.assert_allclose(a, b, rtol=1e-5, atol=1e-5, err_msg=col)
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
 
 
 def test_gdac_flaky_partial_listing_keeps_emitted_tail(tmp_path):
@@ -1381,7 +1373,7 @@ def test_atlas_publish_is_atomic_for_concurrent_readers(spark, tmp_path):
     from argostats_spark.streaming.atlas import atlas_refresh_writer, current_atlas
 
     atlas_dir = str(tmp_path / "atlas")
-    pair_dir = str(tmp_path / "pairs")
+    point_dir = str(tmp_path / "points")
 
     # nothing published yet → loud, specific failure
     with pytest.raises(FileNotFoundError, match="no atlas published"):
@@ -1389,7 +1381,7 @@ def test_atlas_publish_is_atomic_for_concurrent_readers(spark, tmp_path):
 
     raw = interpolate_profiles(make_raw(spark, n_wmos=4, profiles_per_wmo=4, seed=11))
     grid = make_grid(spark, (-180.0, 180.0, -60.0, 64.0), reso_deg=10.0)
-    refresh = atlas_refresh_writer(grid, pair_dir, atlas_dir, 10.0, 2.0)
+    refresh = atlas_refresh_writer(grid, point_dir, atlas_dir, 10.0, 2.0)
 
     # three growing slices = three refreshes; record each complete count
     slices = [raw.filter(F.col("wmo") <= w).localCheckpoint(eager=True)
